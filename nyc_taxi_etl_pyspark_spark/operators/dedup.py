@@ -735,7 +735,6 @@ def semantic_cells(
     dim: int,
     n_cells: int = 8,
     cell_col: str = "cell",
-    backend: str = "arrow",
 ) -> DataFrame:
     """Assign every vector to a SEMANTIC CELL: argmin squared-L2
     distance to ``n_cells`` md5-derived random anchors (the
@@ -743,62 +742,20 @@ def semantic_cells(
     a random-anchor Voronoi partition is exactly k-means' init step,
     and the anchors re-derive in any engine with md5(), same
     discipline as ``md5_rp_planes``). Map-only over the data (never a
-    shuffle of the vectors); ties break to the LOWEST anchor index
-    (first position of the min — deterministic and engine-neutral on
-    bit-identical doubles).
+    shuffle of the vectors): one vectorized pandas_udf
+    (``rp_arrow.md5_cell_udf``, guide §4.2) whose distances are strict
+    left folds in component order — the summation order of the DuckDB
+    oracles' ``list_reduce``, so the cells replay bit-identically
+    there.
 
-    ``backend="arrow"`` (default, round 14, guide §4.2) computes the
-    argmin in one vectorized pandas_udf whose strict-left-fold
-    distances are bit-identical to the HOF folds (see
-    ``rp_arrow.md5_cell_udf``) — the n_cells interpreted folds per row
-    were the measured cell-stage cost (~0.38 s/pass at sf0.1).
-    ``backend="expr"`` keeps the pure-JVM spelling: one wide projection
-    of HOF folds over the anchors attached via a 1-row broadcast
-    (engine-side md5 derivation, see ``md5_rp_planes_sql``)."""
-    from nyc_taxi_etl_pyspark_spark.operators.similarity import (
-        _check_backend,
-    )
+    Contract: ties break to the LOWEST anchor index (first position of
+    the min — deterministic and engine-neutral on bit-identical
+    doubles)."""
+    from nyc_taxi_etl_pyspark_spark.operators.rp_arrow import md5_cell_udf
 
-    _check_backend(backend, "arrow", "expr")
-    if backend == "arrow":
-        from nyc_taxi_etl_pyspark_spark.operators.rp_arrow import (
-            md5_cell_udf,
-        )
-
-        return vectors.withColumn(
-            cell_col,
-            md5_cell_udf(n_cells, dim)(
-                F.col(vec_col).cast("array<double>")
-            ),
-        )
-    from nyc_taxi_etl_pyspark_spark.operators.similarity import (
-        with_md5_planes,
-    )
-
-    vd = F.col(vec_col).cast("array<double>")
-    dists = F.array(
-        *[
-            F.aggregate(
-                F.zip_with(
-                    vd,
-                    F.element_at(F.col("__cell_anchors"), c + 1),
-                    lambda x, y: (x - y) * (x - y),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            for c in range(n_cells)
-        ]
-    )
-    return (
-        with_md5_planes(
-            vectors, n_cells, dim, prefix="cell", col="__cell_anchors"
-        )
-        .withColumn(
-            cell_col,
-            (F.array_position(dists, F.array_min(dists)) - 1).cast("int"),
-        )
-        .drop("__cell_anchors")
+    return vectors.withColumn(
+        cell_col,
+        md5_cell_udf(n_cells, dim)(F.col(vec_col).cast("array<double>")),
     )
 
 
@@ -921,6 +878,11 @@ def semantic_dedup(
     )
 
 
+# SimHash bands: the 64-bit fingerprint is split into this many
+# ``prefix_bits``-wide bands; pairs are blocked on a shared band.
+SIMHASH_N_BANDS = 4
+
+
 def simhash_dedup(
     df: DataFrame,
     id_col: str,
@@ -974,7 +936,7 @@ def simhash_dedup(
     sim = votes.select(F.col(id_col), fingerprint.alias("simhash"))
 
     bands = []
-    for band in range(4):
+    for band in range(SIMHASH_N_BANDS):
         shift = band * prefix_bits
         bands.append(
             F.struct(
@@ -1024,8 +986,8 @@ def simhash_dedup(
     def _pfx(col, j):
         return F.shiftrightunsigned(col, j * prefix_bits).bitwiseAND(mask)
 
-    first_shared = F.lit(3)
-    for j in (2, 1, 0):
+    first_shared = F.lit(SIMHASH_N_BANDS - 1)
+    for j in range(SIMHASH_N_BANDS - 2, -1, -1):
         first_shared = F.when(
             _pfx(F.col("__sa"), j) == _pfx(F.col("__sb"), j), F.lit(j)
         ).otherwise(first_shared)

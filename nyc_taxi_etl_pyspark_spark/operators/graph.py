@@ -47,6 +47,12 @@ def pagerank(
     contribute no mass (the classic dangling-node simplification — the
     dangling mass is dropped, not redistributed, so ranks are comparable
     within a run rather than a strict probability distribution).
+
+    Hostile input: an edge with a NULL ``src`` or ``dst`` is dropped
+    (as ``connected_components`` does), so it adds neither a node nor
+    out-degree. With ``weight``, a NULL weight counts toward neither
+    ``deg`` nor any mass, and a source whose out-weights sum to zero
+    sends no mass (its edges' pr·w/Σw is NULL, not inf/NaN).
     """
     # Materialize the edge list ONCE (round 12): ``edges`` is typically
     # the tail of an expensive derivation (for TextRank: tokenize →
@@ -55,6 +61,7 @@ def pagerank(
     # this, the derivation re-executes ~(3 + iterations) times and the
     # plan tree snowballs (measured on q_textrank_keywords at sf0.01:
     # ~2,400 stages and 15.4 s warm → 34 stages and ~1.4 s).
+    edges = edges.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
     if weight is None:
         edges = edges.select("src", "dst").localCheckpoint(eager=True)
         deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
@@ -64,7 +71,9 @@ def pagerank(
             "src", "dst", F.col(weight).cast("double").alias("__w")
         ).localCheckpoint(eager=True)
         deg = edges.groupBy("src").agg(F.sum("__w").alias("deg"))
-        edge_mass = F.col("pr") * F.col("__w") / F.col("deg")
+        # try_divide: a zero out-weight sum yields NULL mass (dropped by
+        # the sum) instead of raising under ANSI mode
+        edge_mass = F.try_divide(F.col("pr") * F.col("__w"), F.col("deg"))
     # Scale-adaptive algorithm choice (round 15, guide §1.2 — the same
     # move as connected_components' small-graph path): every engine
     # caller runs PageRank on a graph whose node set is BOUNDED BY
@@ -133,7 +142,9 @@ def _pagerank_single_task(
     summed over EVERY edge row (duplicates contribute like the
     groupBy-sum did); pr = (1−d)/n + d·mass; sink nodes keep rank but
     contribute none. deg is the out-edge count (long) unweighted, the
-    out-weight sum (double) weighted; no-out-edge nodes report 0.
+    out-weight sum (double) weighted; no-out-edge nodes report 0. A
+    NULL weight adds nothing to deg or mass, and a zero-deg source
+    sends no mass — the loop's NULL mass, ignored by its sum.
     Edges are sorted before accumulation so the result is a pure
     function of the edge SET."""
     id_t = edges.schema["src"].dataType.simpleString()
@@ -160,14 +171,18 @@ def _pagerank_single_task(
             return pd.DataFrame({"token": nodes, "deg": nodes, "pr": nodes})
         if weighted:
             w = pdf["__w"].to_numpy(dtype="float64")
+            w = np.where(np.isnan(w), 0.0, w)  # NULL weight arrives as NaN
             deg = np.zeros(n, dtype="float64")
             np.add.at(deg, isrc, w)
         else:
+            w = 1.0
             deg = np.bincount(isrc, minlength=n).astype("float64")
+        sends = deg[isrc] != 0
+        div = np.where(sends, deg[isrc], 1.0)  # no 0/0 in the masked rows
         pr = np.full(n, 1.0 / n)
         base = (1.0 - d) / n
         for _ in range(iters):
-            contrib = pr[isrc] * (w if weighted else 1.0) / deg[isrc]
+            contrib = np.where(sends, pr[isrc] * w / div, 0.0)
             mass = np.zeros(n, dtype="float64")
             np.add.at(mass, idst, contrib)
             pr = base + d * mass

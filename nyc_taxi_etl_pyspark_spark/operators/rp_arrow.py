@@ -1,9 +1,9 @@
-"""Arrow (pandas_udf) backends for the md5-derived similarity
+"""Arrow (pandas_udf) kernels for the md5-derived similarity
 operators: the sign-RP signature stage of ``rp_lsh_similarity_join``,
 the Voronoi cell assignment of ``semantic_cells``, and the strict-fold
 pair dot (round 14, guide §4.2). Every kernel accumulates with a strict
 left fold over vector components so its doubles are BIT-IDENTICAL to
-the interpreted HOF folds (and the DuckDB oracles) they replace.
+the DuckDB oracles' ``list_reduce`` folds (same IEEE ops, same order).
 
 Lives in its own module WITHOUT ``from __future__ import annotations``:
 PySpark resolves pandas_udf type hints by evaluating them against the
@@ -41,13 +41,12 @@ def _planes(n_planes: int, dim: int, prefix: str) -> np.ndarray:
 def md5_cell_udf(n_cells: int, dim: int, prefix: str = "cell"):
     """pandas_udf mapping ``vec_col`` → the nearest md5-anchor Voronoi
     cell (argmin of squared-L2, ties to the LOWEST anchor index) — the
-    Arrow spelling of ``semantic_cells``'s HOF argmin (round 14, guide
-    §4.2: n_cells interpreted folds per row). Distances accumulate with
-    a strict left fold over components ((x_i − a_i)² added in component
-    order), bit-identical to ``aggregate(zip_with(...))`` and the DuckDB
-    oracle; ``np.argmin`` picks the first minimum, matching
-    ``array_position`` of the min. NULL / wrong-length vectors yield
-    NULL, matching the expr path's null propagation."""
+    kernel of ``semantic_cells`` (round 14, guide §4.2). Distances
+    accumulate with a strict left fold over components ((x_i − a_i)²
+    added in component order), bit-identical to the DuckDB oracle's
+    ``list_reduce``; ``np.argmin`` picks the first minimum, matching
+    ``list_position`` of the min. NULL / wrong-length vectors yield
+    NULL."""
     anchors_key = (n_cells, dim, prefix)
 
     @F.pandas_udf("int")
@@ -79,10 +78,9 @@ def md5_cell_udf(n_cells: int, dim: int, prefix: str = "cell"):
 
 def strict_dot_udf(dim: int):
     """pandas_udf computing dot(v_a, v_b) with a strict left fold over
-    components — bit-identical to the HOF ``aggregate(zip_with(a, b,
-    (x, y) -> x*y), 0.0, +)`` per-pair dot (same IEEE ops, same order),
-    vectorized across rows. NULL / wrong-length inputs yield NULL like
-    the HOF's null propagation."""
+    components — bit-identical to a ``list_reduce`` of the products in
+    component order (same IEEE ops, same order), vectorized across
+    rows. NULL / wrong-length inputs yield NULL."""
 
     @F.pandas_udf("double")
     def dot(
@@ -117,8 +115,8 @@ def strict_dot_udf(dim: int):
                 acc += za[:, i] * zb[:, i]
             # nullable Float64 so invalid rows become SQL NULL, not NaN
             # (None into a float64 Series stores NaN, and Spark's NaN
-            # ordering makes `NaN >= threshold` TRUE — the expr backend
-            # drops such pairs via zip_with NULL padding; ADVICE r14)
+            # ordering makes `NaN >= threshold` TRUE, so an invalid
+            # pair would pass every threshold; ADVICE r14)
             res = pd.Series(acc, dtype="Float64")
             res[~valid] = pd.NA
             yield res
@@ -136,14 +134,13 @@ def rp_sign_buckets_udf(
     worker process), and the dots are accumulated with a STRICT LEFT
     FOLD over the dimension axis (one vectorized multiply-add per
     component, in component order), so every dot is BIT-IDENTICAL to
-    the interpreted ``aggregate(zip_with(...))`` HOF fold and to the
-    DuckDB oracle's ``list_reduce`` — same IEEE ops in the same order
-    (pinned by test_rp_sign_buckets_arrow_matches_expr). NULL or
-    wrong-length vectors get NaN dots → all-zero buckets, matching the
-    expr path's ``when(NULL > 0)`` → 0. The HOF spelling was the
-    measured bottleneck of q_similarity_join_md5 (32 interpreted folds
-    per row: 1.6 s of the signature stage at sf0.1; HOFs are
-    CodegenFallback)."""
+    the DuckDB oracle's ``list_reduce`` — same IEEE ops in the same
+    order (pinned by q_similarity_join_md5's oracle). NULL or
+    wrong-length vectors get NaN dots → all-zero buckets; they still
+    join no pair, because the re-rank cosine is NULL for them. An
+    interpreted HOF fold per plane was the measured bottleneck of
+    q_similarity_join_md5 (32 folds per row: 1.6 s of the signature
+    stage at sf0.1; HOFs are CodegenFallback)."""
     n_planes = n_bands * bits_per_band
 
     @F.pandas_udf("array<long>")

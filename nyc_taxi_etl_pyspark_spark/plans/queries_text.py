@@ -746,11 +746,11 @@ def _cached_ivfpq_encoded(spark, e, sf_dir: str, trained: tuple):
     fixture, cached per (session, embeddings-file identity) — a real
     deployment encodes once and serves many probes (what the persisted
     tier does physically); this memo restores that shape for the
-    in-memory tier. The ARROW backend is the serving-path choice
-    (round 12): the expr tree costs ~3 s of py4j/plan construction and
-    is re-INTERPRETED per element on every probe's ADC scan (measured
+    in-memory tier. ``ivfpq_encode`` is the numpy bulk kernel (round
+    12): a JVM-side HOF encode cost ~3 s of py4j/plan construction and
+    was re-INTERPRETED per element on every probe's ADC scan (measured
     16.5 s/probe at 2k vectors vs 3.6 s for the identical plan over
-    arrow-encoded codes — and the gap grows with corpus size, the
+    numpy-encoded codes — and the gap grows with corpus size, the
     whole cause of the 97 s sf1 wall the round-11 verdict flagged).
     Plans are session-bound, so the key carries the applicationId."""
     from nyc_taxi_etl_pyspark_spark.operators.similarity import (
@@ -763,8 +763,7 @@ def _cached_ivfpq_encoded(spark, e, sf_dir: str, trained: tuple):
     )
     if ck not in _ANN_TRAIN_CACHE:
         _ANN_TRAIN_CACHE[ck] = ivfpq_encode(
-            e, trained[0], trained[1], "vec_id", "embedding",
-            backend="arrow",
+            e, trained[0], trained[1], "vec_id", "embedding"
         )
     return _ANN_TRAIN_CACHE[ck]
 

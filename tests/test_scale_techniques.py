@@ -1179,39 +1179,40 @@ def test_corpus_embeds_and_ann_indexes_in_engine(spark, sf_dir, tmp_path):
 
 
 def test_pq_arrow_encode_matches_expr(spark, sf_dir):
-    """The round-14 Arrow PQ encode backend (the centroid-free subset
-    of the IVF×PQ bulk encoder, now selected by pq_topk_cosine and
-    build_pq_index) must produce the identical codes as the expr
-    backend on the fixture — both argmins tie-break lowest-index."""
+    """The numpy PQ encode (the centroid-free subset of the IVF×PQ
+    bulk encoder) must produce the identical codes as the independent
+    JVM-side HOF reference on the fixture — both argmins tie-break
+    lowest-index."""
     from nyc_taxi_etl_pyspark_spark.operators.similarity import (
         pq_encode,
         pq_train_codebooks,
     )
+    from tests.ann_reference import pq_encode_ref
 
     e = load_table(spark, sf_dir, "embeddings")
     books = pq_train_codebooks(e, "vec_id", "embedding", 8, 32)
 
-    def codes(backend):
+    def codes(encode):
         return sorted(
-            tuple(r) for r in pq_encode(
-                e, books, "vec_id", "embedding", backend=backend
+            tuple(r) for r in encode(
+                e, books, "vec_id", "embedding"
             ).drop("embedding").collect()
         )
 
-    expr = codes("expr")
-    assert expr == codes("arrow") and len(expr) > 0
+    ref = codes(pq_encode_ref)
+    assert ref == codes(pq_encode) and len(ref) > 0
 
 
 def test_ivfpq_arrow_encode_matches_expr_and_probes(
     spark, sf_dir, tmp_path
 ):
-    """The Arrow bulk-encode backend (vectorized numpy mapInPandas,
-    ~4× the interpreted-HOF expr throughput at 20k rows) must (a)
-    produce the identical codes as the expr backend on the fixture
-    (both argmins tie-break lowest-index; float-order divergence is
-    possible only on exact near-ties, absent on isotropic data), (b)
-    be self-consistent across runs, and (c) back a persisted index
-    whose probe equals the expr-built index's probe."""
+    """The numpy bulk IVF×PQ encode (vectorized mapInPandas, ~4× the
+    interpreted-HOF throughput at 20k rows) must (a) produce the
+    identical codes as the independent JVM-side HOF reference on the
+    fixture (both argmins tie-break lowest-index; float-order
+    divergence is possible only on exact near-ties, absent on
+    isotropic data), (b) be self-consistent across runs, and (c) back
+    a persisted index whose probe self-hits."""
     from nyc_taxi_etl_pyspark_spark.operators.similarity import (
         build_ivfpq_index,
         ivfpq_encode,
@@ -1219,66 +1220,36 @@ def test_ivfpq_arrow_encode_matches_expr_and_probes(
         ivfpq_train,
     )
     from nyc_taxi_etl_pyspark_spark.sources.txtable import TransactionalTable
+    from tests.ann_reference import ivfpq_encode_ref
 
     e = load_table(spark, sf_dir, "embeddings")
     cents, books = ivfpq_train(e, "vec_id", "embedding")
     cols = ["vec_id", "centroid_id"] + [f"__code_{m}" for m in range(8)]
-    expr = sorted(
-        map(
-            tuple,
-            ivfpq_encode(e, cents, books, "vec_id", "embedding")
-            .select(*cols)
-            .collect(),
-        )
-    )
-    arrow = sorted(
-        map(
-            tuple,
-            ivfpq_encode(
-                e, cents, books, "vec_id", "embedding", backend="arrow"
+
+    def codes(encode):
+        return sorted(
+            map(
+                tuple,
+                encode(e, cents, books, "vec_id", "embedding")
+                .select(*cols)
+                .collect(),
             )
-            .select(*cols)
-            .collect(),
         )
-    )
-    assert expr == arrow and len(expr) > 0
-    arrow2 = sorted(
-        map(
-            tuple,
-            ivfpq_encode(
-                e, cents, books, "vec_id", "embedding", backend="arrow"
-            )
-            .select(*cols)
-            .collect(),
-        )
-    )
-    assert arrow == arrow2  # deterministic across runs
+
+    ref, got = codes(ivfpq_encode_ref), codes(ivfpq_encode)
+    assert ref == got and len(ref) > 0
+    assert got == codes(ivfpq_encode)  # deterministic across runs
     q = e.where("vec_id = 0").select(
         F.col("embedding").alias("query_embedding")
     )
-    ta = TransactionalTable(str(tmp_path / "a"))
-    tb = TransactionalTable(str(tmp_path / "b"))
+    t = TransactionalTable(str(tmp_path / "a"))
     build_ivfpq_index(
-        ta, e, id_col="vec_id", vec_col="embedding",
-        trained=(cents, books), backend="arrow",
+        t, e, id_col="vec_id", vec_col="embedding", trained=(cents, books)
     )
-    build_ivfpq_index(
-        tb, e, id_col="vec_id", vec_col="embedding",
-        trained=(cents, books), backend="expr",
-    )
-    got_a = [
-        tuple(r)
-        for r in ivfpq_index_probe(
-            spark, ta, q, id_col="vec_id", vec_col="embedding", k=10
-        ).collect()
-    ]
-    got_b = [
-        tuple(r)
-        for r in ivfpq_index_probe(
-            spark, tb, q, id_col="vec_id", vec_col="embedding", k=10
-        ).collect()
-    ]
-    assert got_a == got_b and got_a[0][0] == 0
+    top = ivfpq_index_probe(
+        spark, t, q, id_col="vec_id", vec_col="embedding", k=10
+    ).collect()
+    assert top[0][0] == 0
 
 
 def test_ivfpq_index_append_maintenance(spark, sf_dir, tmp_path):
@@ -1689,9 +1660,7 @@ def test_ivfpq_append_drift_and_retrain(spark, tmp_path):
     base = e.where("vec_id < 1600")
     extra = e.where("vec_id >= 1600")  # 400 = 25% of the indexed 1600
     t = TransactionalTable(str(tmp_path / "idx"))
-    build_ivfpq_index(
-        t, base, id_col="vec_id", vec_col="embedding", backend="arrow"
-    )
+    build_ivfpq_index(t, base, id_col="vec_id", vec_col="embedding")
     v_trained = t.latest_version()
     ivfpq_index_append(spark, t, extra, "vec_id", "embedding")
     assert t.count() == 2000
@@ -1790,7 +1759,7 @@ def test_ivfpq_maintain_auto_retrains_past_threshold(spark, tmp_path):
     # NON-default shape: retrain must not silently reshape it
     build_ivfpq_index(
         t, base, "vec_id", "embedding",
-        n_cells=4, m_subspaces=4, k_codes=8, backend="arrow",
+        n_cells=4, m_subspaces=4, k_codes=8,
     )
 
     def shape():
@@ -1965,16 +1934,13 @@ def test_md5_planes_sql_matches_python_exact(spark):
 
 
 def test_rp_sign_buckets_arrow_matches_expr(spark, sf_dir):
-    """The round-14 arrow signature backend of
-    ``rp_lsh_similarity_join`` must produce BIT-IDENTICAL band buckets
-    to the HOF/expr spelling — the strict-left-fold accumulation is the
-    whole argument for why the oracle hash of q_similarity_join_md5
-    cannot move. Compared row-for-row on the full corpus fixture, plus
-    degenerate rows (zero vector, NULL vector, wrong-length vector)
-    appended — the wrong-length row (ADVICE r14) pins that the arrow
-    re-rank yields SQL NULL (not NaN, which Spark orders ABOVE every
-    threshold) for an invalid pair, like the expr backend's zip_with
-    NULL padding."""
+    """Degenerate rows must add no pair to ``rp_lsh_similarity_join``:
+    a zero vector, a NULL vector and a wrong-length vector all land in
+    the all-zero buckets, so they DO become candidates — the re-rank
+    must yield SQL NULL for them (not NaN, which Spark orders ABOVE
+    every threshold; ADVICE r14). Appending them to the corpus fixture
+    must leave the pair set unchanged; the corpus pair set itself is
+    pinned against DuckDB by q_similarity_join_md5's oracle."""
     from pyspark.sql import functions as F
 
     from nyc_taxi_etl_pyspark_spark.operators.similarity import (
@@ -1992,19 +1958,15 @@ def test_rp_sign_buckets_arrow_matches_expr(spark, sf_dir):
     )
     vecs = e.unionByName(degen.select(F.col("vec_id").cast(dict(e.dtypes)["vec_id"]), "embedding"))
 
-    def pairs(backend):
+    def pairs(df):
         out = rp_lsh_similarity_join(
-            vecs,
-            id_col="vec_id",
-            vec_col="embedding",
-            dim=64,
-            backend=backend,
+            df, id_col="vec_id", vec_col="embedding", dim=64
         )
         return sorted(
             (r["id_a"], r["id_b"], r["cosine_sim"]) for r in out.collect()
         )
 
-    assert pairs("arrow") == pairs("expr")
+    assert pairs(vecs) == pairs(e)
 
 
 def test_pagerank_matches_pure_python_replay(spark):
@@ -2065,9 +2027,7 @@ def test_ivfpq_probe_respects_row_level_delete(spark, sf_dir, tmp_path):
         "vec_id", "embedding"
     )
     t = TransactionalTable(str(tmp_path / "ann"))
-    build_ivfpq_index(
-        t, e, id_col="vec_id", vec_col="embedding", backend="arrow"
-    )
+    build_ivfpq_index(t, e, id_col="vec_id", vec_col="embedding")
     v0 = t.latest_version()
     target = 7
     qv = e.where(f"vec_id = {target}").select(
@@ -2107,26 +2067,30 @@ def test_ivfpq_probe_respects_row_level_delete(spark, sf_dir, tmp_path):
     ).count() == 1
 
 
-def test_arrow_vs_hof_backend_parity(spark):
-    """Direct arrow-vs-hof parity for cosine_pairs_within_group and
-    knn_within_group (round-13 verdict #5 / advice #2): a deterministic
-    synthetic corpus crossing the 1024-row chunk boundary, containing
-    zero vectors (no cosine — both backends must drop them as sources
-    AND neighbors), exact duplicate vectors (cosine 1.0 ties), and
-    near-boundary cosines. Both backends must emit identical
-    (id_a, id_b, rounded sim) sets and identical kNN neighbor lists."""
+def test_pair_and_knn_kernels_match_duckdb(spark, tmp_path):
+    """cosine_pairs_within_group and knn_within_group against their
+    DuckDB oracles (the q_dedup_embedding / q_knn_per_vector SQL,
+    verbatim from the registry) on a deterministic synthetic corpus
+    that crosses the 1024-row chunk boundary and contains zero vectors
+    (no cosine — dropped as sources AND neighbors), exact duplicate
+    vectors (cosine 1.0 ties, broken by id) and near-boundary cosines.
+    The oracles see the corpus without its zero-norm rows: DuckDB's
+    list_cosine_similarity returns -1.0, not NULL, for a zero vector."""
     import math
+
+    import duckdb
 
     from nyc_taxi_etl_pyspark_spark.operators.similarity import (
         cosine_pairs_within_group,
         knn_within_group,
     )
+    from nyc_taxi_etl_pyspark_spark.plans.registry import all_oracle_sql
 
     dim = 8
     rows = []
-    for i in range(1100):  # > 1024: exercises the arrow chunk boundary
+    for i in range(1100):  # > 1024: exercises the chunk boundary
         if i % 97 == 0:
-            vec = [0.0] * dim  # zero-norm: excluded by BOTH backends
+            vec = [0.0] * dim  # zero-norm: no cosine
         elif i % 5 == 0:
             vec = [1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0]  # exact dup family
         else:
@@ -2139,41 +2103,61 @@ def test_arrow_vs_hof_backend_parity(spark):
     df = spark.createDataFrame(
         rows, "vid int, blk int, embedding array<double>"
     )
+    path = str(tmp_path / "vecs.parquet")
+    df.coalesce(1).write.parquet(path)
+    oracles = all_oracle_sql()
 
-    def pair_set(backend):
-        return {
-            (r["id_a"], r["id_b"], r["cosine_sim"])
-            for r in cosine_pairs_within_group(
-                df, id_col="vid", vec_col="embedding", block_col="blk",
-                threshold=0.9, backend=backend,
-            ).collect()
-        }
+    def oracle(name):
+        con = duckdb.connect()
+        try:
+            con.execute(
+                "CREATE VIEW embeddings AS SELECT vid AS vec_id, "
+                "blk AS label, embedding "
+                f"FROM read_parquet('{path}/*.parquet') "
+                "WHERE list_dot_product(embedding, embedding) > 0"
+            )
+            return con.execute(oracles[name]).fetchall()
+        finally:
+            con.close()
 
-    arrow_pairs, hof_pairs = pair_set("arrow"), pair_set("hof")
-    assert arrow_pairs, "fixture must produce pairs"
-    assert arrow_pairs == hof_pairs
+    def r6(x):
+        return round(x, 6)
 
-    def knn_lists(backend):
-        out = {}
-        for r in knn_within_group(
+    pairs = {
+        (r["id_a"], r["id_b"], r["block"], r6(r["cosine_sim"]))
+        for r in cosine_pairs_within_group(
             df, id_col="vid", vec_col="embedding", block_col="blk",
-            k=3, backend=backend,
-        ).collect():
-            out.setdefault(r["id_a"], []).append((r["id_b"], r["cosine_sim"]))
-        return {k: sorted(v) for k, v in out.items()}
+            threshold=0.3,
+        ).collect()
+    }
+    want = {(a, b, blk, r6(s)) for a, b, blk, s in oracle("q_dedup_embedding")}
+    assert pairs and pairs == want
+    assert any(s == 1.0 for *_, s in pairs)  # the duplicate-family ties
 
-    arrow_knn, hof_knn = knn_lists("arrow"), knn_lists("hof")
-    assert arrow_knn == hof_knn
-    assert all(i not in arrow_knn for i in range(0, 1100, 97))  # zero vecs
+    knn = sorted(
+        (r["id_a"], r["id_b"], r6(r["cosine_sim"]))
+        for r in knn_within_group(
+            df, id_col="vid", vec_col="embedding", block_col="blk", k=3,
+        ).collect()
+    )
+    assert knn == sorted(
+        (a, b, r6(s)) for a, b, s in oracle("q_knn_per_vector")
+    )
+    zero = set(range(0, 1100, 97))
+    assert not any(a in zero or b in zero for a, b, _ in knn)
 
 
 def test_arrow_encoders_degenerate_vectors(spark, sf_dir):
-    """ADVICE r14: the arrow backends of ivf_assign / pq_encode /
-    ivfpq_encode did ``np.array(col.tolist())``, which RAISES on a
-    NULL or ragged (wrong-length) embedding and killed the task,
-    where the expr backends propagated NULL. Pin the pre-mask: the
-    batch survives, invalid rows yield NULL centroid/codes, and the
-    valid rows still agree with the expr backend exactly."""
+    """ADVICE r14/r15: the numpy kernels of ivf_assign / pq_encode /
+    ivfpq_encode must survive NULL, ragged (wrong-length) and
+    NULL-element embeddings in a batch — ``np.array(col.tolist())``
+    raises on a ragged batch, and a NaN row would win the argmin at
+    index 0 — and give those rows NULL centroid and codes, while the
+    valid rows (a zero vector among them) still agree with the
+    independent JVM-side reference exactly. Ties: the kernels run on
+    quantizers with every centroid/codeword appended a second time, so
+    each argmin ties exactly; the lowest index must win, i.e. the
+    codes must equal the reference's over the plain quantizer."""
     from pyspark.sql import functions as F
 
     from nyc_taxi_etl_pyspark_spark.operators.similarity import (
@@ -2183,97 +2167,79 @@ def test_arrow_encoders_degenerate_vectors(spark, sf_dir):
         pq_encode,
         pq_seed_codebooks,
     )
+    from tests.ann_reference import (
+        ivf_assign_ref,
+        ivfpq_encode_ref,
+        pq_encode_ref,
+    )
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    bad = [10**12, 10**12 + 1, 10**12 + 2]
     degen = spark.createDataFrame(
         [
-            (10**12, None),  # NULL vector
-            (10**12 + 1, [1.0] * 63),  # wrong-length (dim-1) vector
+            (bad[0], None),  # NULL vector
+            (bad[1], [1.0] * 63),  # wrong-length (dim-1) vector
+            (bad[2], [1.0] * 63 + [None]),  # NULL element
         ],
         "vec_id long, embedding array<double>",
     )
-    vecs = e.where("vec_id < 50").unionByName(
+    zero = spark.createDataFrame(
+        [(10**12 + 3, [0.0] * 64)], "vec_id long, embedding array<double>"
+    )
+    good = e.where("vec_id < 50").unionByName(
+        zero.select(
+            F.col("vec_id").cast(dict(e.dtypes)["vec_id"]), "embedding"
+        )
+    )
+    vecs = good.unionByName(
         degen.select(
             F.col("vec_id").cast(dict(e.dtypes)["vec_id"]), "embedding"
         )
     )
     cents, books = ivfpq_train(e, "vec_id", "embedding")
-    cent_df = spark.createDataFrame(
-        [(int(c), list(map(float, v))) for c, v in cents],
-        "centroid_id int, centroid_vec array<double>",
-    )
+    cents2 = cents + [(c + len(cents), v) for c, v in cents]
+    books2 = [b + b for b in books]
 
-    # ivf_assign: NULL centroid for invalid rows, expr parity on valid
-    got = {
-        r["vec_id"]: r["centroid_id"]
-        for r in ivf_assign(
-            vecs, cent_df, "vec_id", "embedding", backend="arrow"
-        ).collect()
-    }
-    assert got[10**12] is None and got[10**12 + 1] is None
-    expr = {
-        r["vec_id"]: r["centroid_id"]
-        for r in ivf_assign(
-            e.where("vec_id < 50"), cent_df, "vec_id", "embedding",
-            backend="expr"
-        ).collect()
-    }
-    assert {k: v for k, v in got.items() if k < 10**12} == expr
+    def cent_df(cs):
+        return spark.createDataFrame(
+            [(int(c), list(map(float, v))) for c, v in cs],
+            "centroid_id int, centroid_vec array<double>",
+        )
 
-    # pq_encode / ivfpq_encode: batch survives, NULL codes for the
-    # NULL row (the ragged row must at least not kill the task)
     pq_books = pq_seed_codebooks(e, "vec_id", "embedding")
-    enc = {
-        r["vec_id"]: r["__code_0"]
-        for r in pq_encode(
-            vecs, pq_books, "vec_id", "embedding", backend="arrow"
-        ).collect()
-    }
-    assert enc[10**12] is None and enc[10**12 + 1] is None
-    ivf_enc = {
-        r["vec_id"]: (r["centroid_id"], r["__code_0"])
-        for r in ivfpq_encode(
-            vecs, cents, books, "vec_id", "embedding", backend="arrow"
-        ).collect()
-    }
-    assert ivf_enc[10**12] == (None, None)
-    assert ivf_enc[10**12 + 1] == (None, None)
 
+    def codes(books):
+        return [f"__code_{m}" for m in range(len(books))]
 
-def test_backend_param_validated(spark, sf_dir):
-    """ADVICE r14: a typo like 'arow' must raise, not silently fall
-    through to the expr/hof execution strategy."""
-    import pytest
-
-    from nyc_taxi_etl_pyspark_spark.operators.dedup import semantic_cells
-    from nyc_taxi_etl_pyspark_spark.operators.similarity import (
-        cosine_pairs_within_group,
-        ivf_assign,
-        knn_within_group,
-        rp_lsh_similarity_join,
-    )
-
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding", "label"
-    )
-    cent_df = spark.createDataFrame(
-        [(0, [1.0] * 64)], "centroid_id int, centroid_vec array<double>"
-    )
-    for call in (
-        lambda: rp_lsh_similarity_join(
-            e, "vec_id", "embedding", dim=64, backend="arow"
+    for encode, ref, args, tied, out in (
+        (
+            ivf_assign, ivf_assign_ref,
+            (cent_df(cents),), (cent_df(cents2),), ["centroid_id"],
         ),
-        lambda: ivf_assign(e, cent_df, "vec_id", "embedding", backend="arow"),
-        lambda: semantic_cells(e, "embedding", dim=64, backend="arow"),
-        lambda: cosine_pairs_within_group(
-            e, "vec_id", "embedding", "label", backend="arow"
+        (
+            pq_encode, pq_encode_ref,
+            (pq_books,), ([b + b for b in pq_books],), codes(pq_books),
         ),
-        lambda: knn_within_group(
-            e, "vec_id", "embedding", "label", backend="arow"
+        (
+            ivfpq_encode, ivfpq_encode_ref,
+            (cents, books), (cents2, books2), ["centroid_id"] + codes(books),
         ),
     ):
-        with pytest.raises(ValueError, match="unknown backend"):
-            call()
+        want = {
+            r["vec_id"]: tuple(r[c] for c in out)
+            for r in ref(good, *args, "vec_id", "embedding").collect()
+        }
+        assert len(want) > 1, encode.__name__
+        for quantizer in (args, tied):
+            got = {
+                r["vec_id"]: tuple(r[c] for c in out)
+                for r in encode(
+                    vecs, *quantizer, "vec_id", "embedding"
+                ).collect()
+            }
+            for v in bad:
+                assert got.pop(v) == (None,) * len(out), (encode.__name__, v)
+            assert got == want, encode.__name__
 
 
 def test_tiled_pair_stage_matches_single_task(spark, sf_dir):
@@ -2420,9 +2386,15 @@ def test_pagerank_single_task_path_matches_loop(spark, sf_dir):
     The rounded (token, deg, pr) output must equal the DataFrame loop
     on both the unweighted and weighted paths — the same
     stable_round(6)+1e-9 discipline that already absorbs Spark↔DuckDB
-    summation drift absorbs the sorted-edge accumulation order here."""
+    summation drift absorbs the sorted-edge accumulation order here.
+    ADVICE r15: hostile edges too — NULL endpoints are dropped, and a
+    NULL weight or a zero out-weight sum sends no mass (never inf/NaN
+    ranks)."""
+    import math
+
     from nyc_taxi_etl_pyspark_spark.operators.graph import pagerank
 
+    schema = "src string, dst string, w double"
     edges = spark.createDataFrame(
         [
             ("a", "b", 2.0), ("b", "c", 1.0), ("c", "a", 3.0),
@@ -2430,15 +2402,31 @@ def test_pagerank_single_task_path_matches_loop(spark, sf_dir):
             ("a", "e", 1.0),                   # e: sink
             ("a", "b", 1.0),                   # duplicate edge row
         ],
-        "src string, dst string, w double",
+        schema,
     )
-    for kw in ({}, {"weight": "w"}):
-        fast = pagerank(edges, iterations=3, **kw)
-        loop = pagerank(
-            edges, iterations=3, single_task_max_edges=0, **kw
+    hostile = edges.unionByName(
+        spark.createDataFrame(
+            [
+                (None, "b", 1.0), ("a", None, 1.0),  # NULL endpoints
+                ("f", "a", 0.0),                     # zero out-weight
+                ("h", "a", 1.0), ("h", "b", -1.0),   # out-weights sum to 0
+                ("g", "a", None), ("g", "c", 2.0),   # NULL weight
+            ],
+            schema,
         )
-        r = lambda df: {
+    )
+    for df, kw in (
+        (edges, {}), (edges, {"weight": "w"}),
+        (hostile, {}), (hostile, {"weight": "w"}),
+    ):
+        fast = pagerank(df, iterations=3, **kw)
+        loop = pagerank(df, iterations=3, single_task_max_edges=0, **kw)
+        r = lambda out: {
             (x["token"], x["deg"], round(x["pr"] + 1e-9, 6))
-            for x in df.collect()
+            for x in out.collect()
         }
-        assert r(fast) == r(loop), kw
+        got = r(fast)
+        assert got == r(loop), kw
+        assert all(
+            t is not None and math.isfinite(pr) for t, _, pr in got
+        ), kw

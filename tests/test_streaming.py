@@ -1347,7 +1347,7 @@ def test_streaming_ann_ingest_appends_into_persisted_index(
     fresh = e.where("vec_id >= 300")
     t = TransactionalTable(str(tmp_path / "ann"))
     build_ivfpq_index(
-        t, base, id_col="vec_id", vec_col="embedding", backend="arrow"
+        t, base, id_col="vec_id", vec_col="embedding"
     )
     n_base = t.count()
 

@@ -164,7 +164,7 @@ def main() -> int:
         extra = e.where(F.col("vec_id") >= cut)
         t = TransactionalTable(tempfile.mkdtemp(prefix="ann_drift_"))
         build_ivfpq_index(
-            t, base, id_col="vec_id", vec_col="embedding", backend="arrow"
+            t, base, id_col="vec_id", vec_col="embedding"
         )
         ivfpq_index_append(spark, t, extra, "vec_id", "embedding")
 
