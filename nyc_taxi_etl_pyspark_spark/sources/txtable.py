@@ -73,6 +73,15 @@ distributed job above a small file-count threshold
 (``_publish_distributed``), so commit-time work scales with
 executors; the driver's only O(files) cost is manifest metadata.
 
+There is ONE on-disk format, recorded as ``meta["layout"] == 2`` on
+every snapshot (``_TABLE_FORMAT``): data files at final unique keys
+under per-commit ``data/c<uuid>/`` dirs with the partition columns
+kept in the pages (shadow hive path segments), decoded partition
+values and footer stats in the manifest, blooms in sharded sidecars,
+columnar (past a size, sharded) checkpoints. A snapshot in any other
+format is rejected with a ``ValueError`` (``_check_format``), never
+read under rules it was not written for.
+
 Storage backends implement only put-if-absent / put / read / list /
 delete / upload. ``LocalStorage`` targets POSIX (put-if-absent via
 ``os.link``, which is atomic and fails on EEXIST).
@@ -113,9 +122,13 @@ _V_WIDTH = 20  # zero-padded so lexicographic listing order == numeric order
 # 1,000 executors is an OOM, not an optimization).
 _MERGE_BROADCAST_MAX_KEYS = 4_000_000
 
-# Layout v2 (write-at-final-keys) hive-partitions on SHADOW copies of
-# the partition columns (``__p_<col>=...`` path segments) so the data
-# pages KEEP the real columns — see ``TransactionalTable._stage``.
+# ``meta["layout"]`` of every snapshot: the one on-disk format (see the
+# module docstring); ``_check_format`` rejects any other value.
+_TABLE_FORMAT = 2
+
+# Partitioned files are hive-partitioned on SHADOW copies of the
+# partition columns (``__p_<col>=...`` path segments) so the data pages
+# KEEP the real columns — see ``TransactionalTable._stage``.
 _SHADOW_PREFIX = "__p_"
 
 
@@ -194,7 +207,7 @@ class LocalStorage:
     # Spark can write DIRECTLY at this store's keys (``url()`` is a
     # Spark-writable location), so commits may skip the staging
     # double-write and land data files at their final unique keys
-    # (layout v2, see ``TransactionalTable._stage``). A backend whose
+    # (see ``TransactionalTable._stage``). A backend whose
     # keys Spark cannot address (or that must route every byte through
     # ``put_if_absent`` — e.g. an encrypting wrapper) sets this False
     # and keeps the staged path.
@@ -377,9 +390,7 @@ def _decode_hive_partition_value(raw: str):
     ``__HIVE_DEFAULT_PARTITION__`` sentinel. Manifests record the
     DECODED value so partition pruning and the streaming source
     compare/emit what the batch reader reconstructs, not the escaped
-    path segment. Decoded manifests carry ``partition_encoding:
-    "decoded"``; ``manifest()`` upgrades legacy (encoded) manifests on
-    read — decode must happen exactly once, because Spark escapes
+    path segment. Decode happens exactly once, at commit: Spark escapes
     ``%`` itself, so re-decoding an already-decoded value that
     legitimately contains ``%XX`` would corrupt it."""
     if raw == HIVE_NULL_PARTITION:
@@ -456,14 +467,12 @@ def collect_file_stats(local_path: str) -> dict | None:
     """Per-column min/max + row count from a parquet file's FOOTER
     (pyarrow metadata read — no data pages touched). Returns
     ``{"rows": n, "cols": {col: [min, max]}, "bytes": size}`` or None
-    when pyarrow is unavailable or the footer carries no statistics.
+    when the footer is unreadable.
     Nested columns and stat-less columns are simply absent (pruning
     treats absence as "cannot exclude"); ``bytes`` is absent when the
     source isn't stat-able."""
-    try:
-        import pyarrow.parquet as pq
-    except ImportError:  # stats are an optimization, never a requirement
-        return None
+    import pyarrow.parquet as pq
+
     try:
         md = pq.ParquetFile(local_path).metadata
     except Exception:
@@ -532,11 +541,7 @@ def _canon_bloom_value(v) -> str:
       stringified temporal/numeric forms above.
 
     Collapsing distinct representations can only ADD false positives
-    (a kept file), never false negatives. Legacy blooms (no ``"v"``
-    key) were built with :func:`_canon_bloom_value_v1`;
-    ``bloom_might_contain`` dispatches on the recorded version so
-    persisted v1 indexes keep probing with the form they were built
-    under."""
+    (a kept file), never false negatives."""
     import datetime as _dt
     import decimal
     import numbers
@@ -575,31 +580,15 @@ def _canon_bloom_value(v) -> str:
     return str(v)
 
 
-def _canon_bloom_value_v1(v) -> str:
-    """LEGACY (pre-v2) canonical form — kept verbatim so blooms
-    persisted by earlier commits keep probing with the exact form they
-    were built under (see ``_canon_bloom_value``)."""
-    import numbers
-
-    if isinstance(v, bool) or v is None or isinstance(v, (str, bytes)):
-        return repr(v)
-    if isinstance(v, numbers.Integral):
-        return repr(int(v))
-    if isinstance(v, numbers.Real):
-        f = float(v)
-        return repr(int(f)) if f.is_integer() else repr(f)
-    return repr(v)
-
-
 _BLOOM_FORMAT_V = 2
 
 
-def _bloom_positions(value, m: int, k: int, canon=_canon_bloom_value) -> list[int]:
+def _bloom_positions(value, m: int, k: int) -> list[int]:
     """k bit positions for ``value`` via double hashing of one md5 of
-    the canonical form (``canon``, defaulting to the current v2)."""
+    its canonical form (``_canon_bloom_value``)."""
     import hashlib
 
-    d = hashlib.md5(canon(value).encode()).digest()
+    d = hashlib.md5(_canon_bloom_value(value).encode()).digest()
     h1 = int.from_bytes(d[:8], "little")
     h2 = int.from_bytes(d[8:], "little") | 1  # odd => full-period stride
     return [(h1 + i * h2) % m for i in range(k)]
@@ -617,11 +606,12 @@ def build_bloom_stats(local_path: str, cols: list[str]) -> dict:
     count, capped at 32 KiB; correctness is one-sided (no false
     negatives), so an overfull bloom only skips less."""
     import base64
+    import hashlib
 
-    try:
-        import pyarrow.parquet as pq
-    except ImportError:  # blooms are an optimization, never a requirement
-        return {}
+    import numpy as _np
+    import pyarrow.compute as _pc
+    import pyarrow.parquet as pq
+
     try:
         f = pq.ParquetFile(local_path)
         # intersect with the file's actual columns: an evolution append
@@ -633,31 +623,16 @@ def build_bloom_stats(local_path: str, cols: list[str]) -> dict:
         t = f.read(columns=present)
     except Exception:
         return {}
-    import hashlib
-
-    try:
-        import numpy as _np
-    except ImportError:
-        _np = None
-    try:
-        import pyarrow.compute as _pc
-    except ImportError:
-        _pc = None
     out: dict[str, dict] = {}
     for c in t.column_names:
-        col = t.column(c)
-        if _pc is not None:
-            # distinct in C (arrow unique) instead of a python set over
-            # to_pylist — same value set, the canon below sees the same
-            # python objects either way
-            vals = [v for v in _pc.unique(col).to_pylist() if v is not None]
-        else:
-            vals = list({v for v in col.to_pylist() if v is not None})
+        # distinct in C (arrow unique) instead of a python set over
+        # to_pylist
+        vals = [v for v in _pc.unique(t.column(c)).to_pylist() if v is not None]
         if not vals:
             continue
         m = min(_BLOOM_MAX_BITS, max(64, 10 * len(vals)))
         m = (m + 7) // 8 * 8
-        if _np is not None and len(vals) > 256:
+        if len(vals) > 256:
             # Vectorized position math (round 15): the per-value md5 is
             # irreducible (it IS the persisted bloom format), but the k
             # double-hash positions and bit sets move to numpy. Exact
@@ -697,22 +672,17 @@ def build_bloom_stats(local_path: str, cols: list[str]) -> dict:
 
 
 def bloom_might_contain(bloom: dict, value) -> bool:
+    """One-sided membership probe: False only when ``value`` is provably
+    absent. A bloom of any format other than ``_BLOOM_FORMAT_V`` gives
+    no proof (True) — it may cost a read, never drop a file."""
     import base64
 
+    if bloom.get("v") != _BLOOM_FORMAT_V:
+        return True
     bits = base64.b64decode(bloom["b64"])
-    # probe with the canonicalization the bloom was BUILT under —
-    # legacy (v1) blooms persist in fixture tables committed before the
-    # value-canonicalization fix and must not see v2 probe forms
-    canon = (
-        _canon_bloom_value
-        if bloom.get("v", 1) >= _BLOOM_FORMAT_V
-        else _canon_bloom_value_v1
-    )
     return all(
         bits[h >> 3] & (1 << (h & 7))
-        for h in _bloom_positions(
-            value, bloom["m"], bloom.get("k", _BLOOM_K), canon
-        )
+        for h in _bloom_positions(value, bloom["m"], bloom.get("k", _BLOOM_K))
     )
 
 
@@ -744,8 +714,7 @@ def prune_files(
     that survive range pruning, only when ``equals`` is given, and
     memoized per sidecar so a commit's blooms load once however many
     files reference them. A missing/unreadable sidecar degrades to
-    "no proof" (file kept). Legacy inline ``bloom`` entries keep
-    working and take precedence. ``files`` restricts the candidate
+    "no proof" (file kept). ``files`` restricts the candidate
     set (e.g. the survivors of manifest PARTITION pruning, which runs
     first because it is pure metadata — so bloom sidecars load only
     for the candidate partitions' files, O(candidates) not
@@ -837,7 +806,6 @@ def prune_files(
             stats[f]["bloom_ref"]
             for f in band_kept
             if "bloom_ref" in stats.get(f, {})
-            and "bloom" not in stats.get(f, {})
         }
         if len(refs) > 1:
             from concurrent.futures import ThreadPoolExecutor
@@ -875,11 +843,10 @@ def prune_files(
                             break
                     except TypeError:  # incomparable types: no proof
                         pass
-                bloom = fstats.get("bloom", {}).get(col)
-                if bloom is None and vs and bloom_loader is not None:
-                    ref = fstats.get("bloom_ref")
-                    if ref:
-                        bloom = (bloom_loader(ref) or {}).get(f, {}).get(col)
+                bloom = None
+                ref = fstats.get("bloom_ref")
+                if ref and vs and bloom_loader is not None:
+                    bloom = (bloom_loader(ref) or {}).get(f, {}).get(col)
                 # TEMPORAL probes canonicalize by LOGICAL VALUE before
                 # hashing, mirroring the band path above: build-side
                 # blooms hash Spark's trimmed space-separated UTC
@@ -887,14 +854,11 @@ def prune_files(
                 # _canon_temporal_cmp's), so a raw 'T'-separated or
                 # fraction-padded string probe of the same instant would
                 # be a bloom FALSE NEGATIVE — a silently skipped file,
-                # violating the one-sided-error contract. Gated on the
-                # bloom's recorded format version: legacy v1 blooms were
-                # built under repr()-canon and must keep raw probes.
+                # violating the one-sided-error contract.
                 if bloom is not None and vs:
                     pvs = (
                         [_canon_temporal_cmp(v) for v in vs]
                         if col in temporal
-                        and bloom.get("v", 1) >= _BLOOM_FORMAT_V
                         else vs
                     )
                     if not any(
@@ -1220,7 +1184,7 @@ def _publish_one(
     optional blooms). Pure per-file work with no shared state — the
     unit both the driver-side loop (small commits) and the distributed
     publish job (large commits) execute. ``local=None`` means the data
-    bytes ALREADY sit at ``key`` (layout v2's write-at-final-keys
+    bytes ALREADY sit at ``key`` (a direct write-at-final-keys
     commit): only the footer/bloom harvest remains — no upload, the
     bytes never move twice."""
     src = local if local is not None else storage.url(key)
@@ -1408,10 +1372,6 @@ def _manifest_key(version: int) -> str:
     return f"{COMMITS_DIR}/v{version:0{_V_WIDTH}d}.json"
 
 
-def _checkpoint_key(version: int) -> str:
-    return f"{CHECKPOINTS_DIR}/v{version:0{_V_WIDTH}d}.json"
-
-
 def _checkpoint_parquet_key(version: int) -> str:
     return f"{CHECKPOINTS_DIR}/v{version:0{_V_WIDTH}d}.parquet"
 
@@ -1423,15 +1383,12 @@ def _checkpoint_root_key(version: int) -> str:
     return f"{CHECKPOINTS_DIR}/v{version:0{_V_WIDTH}d}.root.json"
 
 
-def _checkpoint_shard_key(version: int, i: int, size: int | None = None) -> str:
+def _checkpoint_shard_key(version: int, i: int, size: int) -> str:
     """Shard object key. ``size`` (the writer's checkpoint_shard_files)
     is embedded in the key so two writers of the same immutable version
     configured with DIFFERENT shard sizes publish to disjoint key sets —
     a surviving root can only ever resolve shards sliced the way its
-    own envelope list describes. ``size=None`` renders the legacy
-    (pre-layout-identity) key for reading old roots."""
-    if size is None:
-        return f"{CHECKPOINTS_DIR}/v{version:0{_V_WIDTH}d}.shard-{i:05d}.parquet"
+    own envelope list describes."""
     return (
         f"{CHECKPOINTS_DIR}/v{version:0{_V_WIDTH}d}"
         f".s{size}.shard-{i:05d}.parquet"
@@ -1585,7 +1542,7 @@ def _shard_may_match(
 _CKPT_STAT_COLS = ("rows", "partition", "cols", "bloom_ref")
 
 
-def _encode_checkpoint_parquet(full: dict) -> bytes | None:
+def _encode_checkpoint_parquet(full: dict) -> bytes:
     """COLUMNAR checkpoint encoding — the Delta 'checkpoint parquet'
     shape: one row per data file (key, row count, partition values,
     min/max zone maps, bloom sidecar ref), table-level fields (version,
@@ -1597,16 +1554,12 @@ def _encode_checkpoint_parquet(full: dict) -> bytes | None:
     encoding makes the load a vectorized Arrow read, lets a reader
     PROJECT just the columns a question needs (a count touches only
     the header; planning touches file/partition/cols), and compresses
-    the repetitive key/JSON text ~10×. Returns None when pyarrow is
-    absent (callers fall back to the JSON form — checkpoints are
-    derived, never required)."""
-    try:
-        import io
+    the repetitive key/JSON text ~10×."""
+    import io
 
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-    except ImportError:
-        return None
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     files = full["files"]
     stats = full.get("stats", {})
     cols: dict[str, list] = {c: [] for c in _CKPT_STAT_COLS}
@@ -1657,12 +1610,10 @@ def _decode_checkpoint_parquet(
     columns are never decompressed, the lazy-stats half of the
     columnar-checkpoint design. None/garbage decodes to None (caller
     falls back to delta-chain reconstruction)."""
-    try:
-        import io
+    import io
 
-        import pyarrow.parquet as pq
-    except ImportError:
-        return None
+    import pyarrow.parquet as pq
+
     try:
         pf = pq.ParquetFile(io.BytesIO(data))
         meta = pf.schema_arrow.metadata or {}
@@ -1757,12 +1708,6 @@ def _apply_delta(parent: dict, delta: dict) -> dict:
         full["partition_by"] = list(delta["partition_by"])
     if delta.get("mixed_schemas"):
         full["mixed_schemas"] = True
-    # parent was upgraded on read and delta stats are written decoded,
-    # so the reconstructed snapshot is always decoded — stamp it
-    # unconditionally (not only when partitioned) so persisted
-    # derivatives (checkpoints) never re-decode, and writer-cached and
-    # freshly-reconstructed snapshots compare equal
-    full["partition_encoding"] = "decoded"
     return full
 
 
@@ -1859,13 +1804,10 @@ class TransactionalTable:
             return None
 
     def _read_checkpoint(self, version: int) -> dict | None:
-        """Resolve a persisted checkpoint of ``version``: the columnar
-        parquet form first (current writers), then the SHARDED form
-        (root + every shard, concatenated back into one manifest),
-        then the JSON full-manifest form as the legacy fallback
-        (pre-columnar checkpoints and pyarrow-less writers). Each
-        decodes to the same manifest dict; None when no checkpoint
-        exists."""
+        """Resolve a persisted checkpoint of ``version``: the monolithic
+        columnar parquet form, else the SHARDED form (root + every
+        shard, concatenated back into one manifest). Both decode to the
+        same manifest dict; None when no checkpoint exists."""
         try:
             data = self.storage.read(_checkpoint_parquet_key(version))
         except OSError:
@@ -1876,10 +1818,8 @@ class TransactionalTable:
                 return full
         root = self._read_json(_checkpoint_root_key(version))
         if root is not None:
-            full = self._read_sharded_checkpoint(version, root)
-            if full is not None:
-                return full
-        return self._read_json(_checkpoint_key(version))
+            return self._read_sharded_checkpoint(version, root)
+        return None
 
     def _read_sharded_checkpoint(
         self, version: int, root: dict, shard_idx: list[int] | None = None
@@ -1893,7 +1833,7 @@ class TransactionalTable:
         envs = root.get("shards") or []
         n = len(envs)
         idx = list(range(n)) if shard_idx is None else sorted(shard_idx)
-        size = root.get("shard_size")  # None on legacy roots
+        size = root.get("shard_size")
         files: list[str] = []
         stats: dict[str, dict] = {}
         for i in idx:
@@ -1907,10 +1847,8 @@ class TransactionalTable:
             if part is None:
                 return None
             # layout-identity check: a shard whose file count disagrees
-            # with the root envelope's n_files was sliced by a writer
-            # with a different shard size (legacy keys lack the size
-            # namespace) — reconstructing from it would duplicate or
-            # drop files silently. Fall back to the delta chain.
+            # with the root envelope's n_files would duplicate or drop
+            # files silently. Fall back to the delta chain.
             want = (envs[i] or {}).get("n_files")
             if want is not None and len(part["files"]) != want:
                 return None
@@ -1922,72 +1860,55 @@ class TransactionalTable:
         return full
 
     def _write_checkpoint(self, full: dict) -> None:
-        """Persist a derived checkpoint of the FULL manifest ``full`` —
-        columnar parquet when pyarrow is available (SHARDED with a
-        manifest-list root past ``checkpoint_shard_files`` live files),
-        the legacy JSON dump otherwise. Idempotent put-if-absent: a
-        concurrent writer of the same immutable version produces
+        """Persist a derived checkpoint of the FULL manifest ``full`` as
+        columnar parquet (SHARDED with a manifest-list root past
+        ``checkpoint_shard_files`` live files). Idempotent
+        put-if-absent: a concurrent writer of the same immutable version produces
         identical content, and a crash costs the next reader only a
         few extra delta reads (checkpoints are never required for
         correctness). Sharded order: shards first, root LAST — a
         visible root implies its shards are durable; orphan shards
         from a crash are vacuum backlog."""
         files = full["files"]
-        if len(files) > self.checkpoint_shard_files:
-            header = {
-                k: v for k, v in full.items() if k not in ("files", "stats")
-            }
-            stats = full.get("stats", {})
-            size = self.checkpoint_shard_files
-            shards = []
-            ok = True
-            for i in range(0, len(files), size):
-                sl = files[i : i + size]
-                data = _encode_checkpoint_parquet(
-                    {
-                        **header,
-                        "files": sl,
-                        "stats": {
-                            f: stats[f] for f in sl if f in stats
-                        },
-                    }
-                )
-                if data is None:  # pyarrow absent: fall through to JSON
-                    ok = False
-                    break
-                self.storage.put_if_absent(
-                    _checkpoint_shard_key(full["version"], i // size, size),
-                    data,
-                )
-                shards.append(_shard_envelope(sl, stats))
-            if ok:
-                # any_file: one live key for consumers needing a schema
-                # anchor (empty-prune reads) without loading a shard.
-                # shard_size pins the layout identity: readers compose
-                # shard keys from THIS root's size, so a different-size
-                # writer's shards (or a crashed writer's leftovers) can
-                # never be stitched under this envelope list.
-                root = {
-                    "header": header,
-                    "shards": shards,
-                    "shard_size": size,
-                    "any_file": files[0],
+        if len(files) <= self.checkpoint_shard_files:
+            self.storage.put_if_absent(
+                _checkpoint_parquet_key(full["version"]),
+                _encode_checkpoint_parquet(full),
+            )
+            return
+        header = {k: v for k, v in full.items() if k not in ("files", "stats")}
+        stats = full.get("stats", {})
+        size = self.checkpoint_shard_files
+        shards = []
+        for i in range(0, len(files), size):
+            sl = files[i : i + size]
+            data = _encode_checkpoint_parquet(
+                {
+                    **header,
+                    "files": sl,
+                    "stats": {f: stats[f] for f in sl if f in stats},
                 }
-                self.storage.put_if_absent(
-                    _checkpoint_root_key(full["version"]),
-                    json.dumps(root, sort_keys=True).encode(),
-                )
-                return
-        data = _encode_checkpoint_parquet(full)
-        if data is not None:
-            self.storage.put_if_absent(
-                _checkpoint_parquet_key(full["version"]), data
             )
-        else:
             self.storage.put_if_absent(
-                _checkpoint_key(full["version"]),
-                json.dumps(full, sort_keys=True).encode(),
+                _checkpoint_shard_key(full["version"], i // size, size), data
             )
+            shards.append(_shard_envelope(sl, stats))
+        # any_file: one live key for consumers needing a schema anchor
+        # (empty-prune reads) without loading a shard. shard_size pins
+        # the layout identity: readers compose shard keys from THIS
+        # root's size, so a different-size writer's shards (or a crashed
+        # writer's leftovers) can never be stitched under this envelope
+        # list.
+        root = {
+            "header": header,
+            "shards": shards,
+            "shard_size": size,
+            "any_file": files[0],
+        }
+        self.storage.put_if_absent(
+            _checkpoint_root_key(full["version"]),
+            json.dumps(root, sort_keys=True).encode(),
+        )
 
     def _bloom_sidecar(self, key: str) -> dict:
         """Memoized bloom-sidecar load ({file: {col: bloom}}). Missing
@@ -2051,8 +1972,8 @@ class TransactionalTable:
 
     def manifest(self, version: int | None = None) -> dict | None:
         """The FULL manifest of ``version`` (default: latest),
-        reconstructed from the nearest base — cache, checkpoint, or a
-        full (legacy / v0) commit record — plus the delta records up to
+        reconstructed from the nearest base — cache, checkpoint, or the
+        table's v0 full commit record — plus the delta records up to
         the target (``_full_manifest``). Walks backward past
         irrecoverable versions — with atomic puts none should exist,
         but a vacuum racing this listing may have deleted an old one.
@@ -2070,12 +1991,13 @@ class TransactionalTable:
     def _full_manifest(self, version: int) -> dict | None:
         """Resolve the full manifest of ``version``: walk parent links
         down past delta records until a BASE (cached full manifest, a
-        ``_checkpoints/`` object, or a full commit record — v0 and
-        every pre-delta-format commit), then apply the collected deltas
-        forward, caching every intermediate snapshot. Cost: at most one
-        checkpoint read + ``checkpoint_interval`` delta reads; None if
-        any link of the chain is missing or unreadable (the caller
-        decides whether that is fatal)."""
+        ``_checkpoints/`` object, or the v0 full commit record), then
+        apply the collected deltas forward, caching every intermediate
+        snapshot. Cost: at most one checkpoint read +
+        ``checkpoint_interval`` delta reads; None if any link of the
+        chain is missing or unreadable (the caller decides whether that
+        is fatal). The result passes the format gate
+        (``_check_format``)."""
         chain: list[dict] = []
         cur = version
         base: dict | None = None
@@ -2088,17 +2010,13 @@ class TransactionalTable:
                 break
             ck = self._read_checkpoint(cur)
             if ck is not None and "files" in ck:
-                base = self._cache_put(
-                    cur, self._upgrade_partition_encoding(ck)
-                )
+                base = self._cache_put(cur, ck)
                 break
             raw = self._read_json(_manifest_key(cur))
             if raw is None:
                 return None
-            if "files" in raw:  # full record: v0 or legacy format
-                base = self._cache_put(
-                    cur, self._upgrade_partition_encoding(raw)
-                )
+            if "files" in raw:  # full record: the v0 base of the chain
+                base = self._cache_put(cur, raw)
                 break
             chain.append(raw)
             parent = raw.get("parent")
@@ -2110,7 +2028,23 @@ class TransactionalTable:
             cur = parent if parent is not None else -1
         for d in reversed(chain):
             base = self._cache_put(d["version"], _apply_delta(base, d))
-        return base
+        return self._check_format(base)
+
+    def _check_format(self, m: dict) -> dict:
+        """The one on-disk format gate. Every commit record the writer
+        puts carries ``meta["layout"] == _TABLE_FORMAT``
+        (``_put_manifest`` stamps it); any other or missing value is a
+        superseded format this library no longer reads."""
+        found = (m.get("meta") or {}).get("layout")
+        if found != _TABLE_FORMAT:
+            raise ValueError(
+                f"{self.root}: snapshot v{m.get('version')} has table "
+                f"format layout={found!r}; only layout={_TABLE_FORMAT} "
+                f"(write-at-final-keys, decoded partition values, "
+                f"sidecar blooms) is supported — superseded formats are "
+                f"no longer read. Rewrite the data into a new table."
+            )
+        return m
 
     def _planning_manifest(
         self,
@@ -2176,13 +2110,12 @@ class TransactionalTable:
                 base = dict(root.get("header") or {})
                 base["files"] = part["files"]
                 base["stats"] = part["stats"]
-                base = self._upgrade_partition_encoding(base)
                 for d in reversed(chain):
                     base = _apply_delta(base, d)
                 base["pruned_view"] = True
                 if root.get("any_file"):
                     base["any_file"] = root["any_file"]
-                return base
+                return self._check_format(base)
             raw = self._read_json(_manifest_key(cur))
             if raw is None or "files" in raw:
                 # missing link or a FULL record base: normal path
@@ -2194,33 +2127,6 @@ class TransactionalTable:
             if parent is not None and parent >= cur:
                 return self.manifest(version)  # corrupted link
             cur = parent if parent is not None else -1
-
-    @staticmethod
-    def _upgrade_partition_encoding(m: dict) -> dict:
-        """In-memory upgrade of LEGACY manifests whose partition values
-        were recorded as raw path segments (percent-escaped, hive NULL
-        sentinel): decode them once so every consumer compares logical
-        values. New manifests are flagged ``partition_encoding:
-        "decoded"`` and pass through untouched — decoding is not
-        idempotent (Spark escapes ``%`` itself), so the flag is what
-        prevents double-decoding."""
-        if m.get("partition_encoding") == "decoded":
-            return m
-        for fstats in m.get("stats", {}).values():
-            part = fstats.get("partition")
-            if part:
-                fstats["partition"] = {
-                    _unquote(k): _decode_hive_partition_value(v)
-                    if isinstance(v, str)
-                    else v
-                    for k, v in part.items()
-                }
-        # Stamp the flag so any persisted derivative of this dict (a
-        # vacuum base-keep checkpoint, a commit checkpoint) carries it —
-        # without this a fresh handle reading the derivative would decode
-        # a second time, corrupting '%'-escaped partition values.
-        m["partition_encoding"] = "decoded"
-        return m
 
     def _committed_at(self, version: int) -> float | None:
         """Commit wall-time of ``version`` WITHOUT reconstructing its
@@ -2237,25 +2143,6 @@ class TransactionalTable:
             return raw.get("committed_at")
         ck = self._read_checkpoint(version)
         return ck.get("committed_at") if ck is not None else None
-
-    @staticmethod
-    def _layout_of(m: dict | None) -> int:
-        """Physical layout version of snapshot ``m`` (sticky table
-        meta): 1 = staged hive paths, partition columns reconstructed
-        via ``basePath``; 2 = write-at-final-keys commit dirs with
-        partition columns kept in the data pages (shadow path
-        segments). Decided at table creation / full replace, carried
-        by every later manifest."""
-        return int(((m or {}).get("meta") or {}).get("layout") or 1)
-
-    def _path_partitioned(self, m: dict) -> bool:
-        """True when snapshot ``m``'s partition columns exist ONLY in
-        the file paths (layout v1) and a read must reconstruct them
-        with ``basePath``; layout v2 snapshots carry them in the data
-        pages and must NOT set ``basePath`` (explicit files under
-        multiple commit dirs would trip Spark's conflicting-directory
-        check)."""
-        return bool(m.get("partition_by")) and self._layout_of(m) < 2
 
     def version_as_of(self, timestamp: float) -> int:
         """TIMESTAMP AS OF resolution: the latest version whose commit
@@ -2323,9 +2210,7 @@ class TransactionalTable:
         ≤ k files + false positives), and the residual is ``isin``. ``partitions={col: [values]}`` (partitioned
         tables) is EXACT manifest pruning: only files whose recorded
         partition values match are opened, no residual filter needed —
-        the metastore-free form of partition pruning. Partitioned
-        snapshots are read with ``basePath`` so the hive-encoded
-        partition columns reappear in the frame.
+        the metastore-free form of partition pruning.
         ``as_of_timestamp`` (epoch seconds, mutually exclusive with
         ``version``) resolves TIMESTAMP AS OF via ``version_as_of``."""
         if as_of_timestamp is not None:
@@ -2354,12 +2239,7 @@ class TransactionalTable:
                 # every shard excluded by envelope: empty frame with
                 # the table's schema, anchored on a live file key
                 try:
-                    reader = spark.read
-                    if self._path_partitioned(m):
-                        reader = reader.option(
-                            "basePath", self.storage.url(DATA_DIR)
-                        )
-                    reader = self._schema_reader(reader, m)
+                    reader = self._schema_reader(spark.read, m)
                     return self._empty_frame(reader, m, m["any_file"])
                 except Exception:
                     # the checkpoint's anchor file may have been
@@ -2420,10 +2300,7 @@ class TransactionalTable:
             bloom_loader=self._bloom_sidecar,
             files=files,
         )
-        reader = spark.read
-        if self._path_partitioned(m):
-            reader = reader.option("basePath", self.storage.url(DATA_DIR))
-        reader = self._schema_reader(reader, m)
+        reader = self._schema_reader(spark.read, m)
         if not files:
             # every file excluded: empty frame with the table's schema
             df = self._empty_frame(reader, m, m["files"][0])
@@ -2450,9 +2327,8 @@ class TransactionalTable:
                     df = df.where(F.col(col) >= F.lit(lo))
                 if hi is not None:
                     df = df.where(F.col(col) <= F.lit(hi))
-            # residual partition-value filter: exact on any layout (the
-            # partition columns exist in the frame either from the data
-            # pages or reconstructed from the hive paths). None selects
+            # residual partition-value filter: exact, because the
+            # partition columns are kept in the data pages. None selects
             # the NULL partition — three-valued isin would silently
             # drop it, so it becomes an explicit isNull disjunct.
             for col, vals in (partitions or {}).items():
@@ -2515,10 +2391,7 @@ class TransactionalTable:
                 "full refresh"
             )
         new_files = [f for f in m1["files"] if f not in old_files]
-        reader = spark.read
-        if self._path_partitioned(m1):
-            reader = reader.option("basePath", self.storage.url(DATA_DIR))
-        reader = self._schema_reader(reader, m1)
+        reader = self._schema_reader(spark.read, m1)
         if not new_files:
             anchor = m1["files"] or m0["files"]
             if not anchor:
@@ -2841,13 +2714,9 @@ class TransactionalTable:
             raise FileNotFoundError(f"no committed version in {self.root}")
         missing: list[str] = []
         row_mismatches: list[str] = []
-        try:
-            import pyarrow.parquet as pq
-        except ImportError:
-            pq = None
         stats = m.get("stats", {})
         partition_mismatches: list[str] = []
-        check_parts = self._layout_of(m) >= 2 and bool(m.get("partition_by"))
+        check_parts = bool(m.get("partition_by"))
         temporal = {
             c
             for c, typ in (m.get("schema") or {}).items()
@@ -2866,8 +2735,6 @@ class TransactionalTable:
             if not os.path.exists(path):
                 missing.append(key)
                 continue
-            if pq is None:
-                continue
             actual = collect_file_stats(path)
             if actual is None:
                 missing.append(key)  # unreadable == unusable
@@ -2876,7 +2743,7 @@ class TransactionalTable:
             if want is not None and actual["rows"] != want:
                 row_mismatches.append(key)
             if check_parts:
-                # layout-v2 invariant: a file's PAGES carry its
+                # format invariant: a file's PAGES carry its
                 # partition columns, and every row shares the one
                 # value its path/stats record — so the ON-DISK footer
                 # min and max of each partition column must BOTH equal
@@ -3041,7 +2908,7 @@ class TransactionalTable:
                     "n_files": len(m.get("files", [])),
                     "n_added": n_added,
                     "n_removed": n_removed,
-                    "layout": int(meta.get("layout") or 1),
+                    "layout": meta["layout"],
                     "meta": meta,
                     "committed_at": m.get("committed_at"),
                 }
@@ -3131,44 +2998,31 @@ class TransactionalTable:
         partition_by: list[str] | None = None,
         max_records_per_file: int | None = None,
         bloom_by: list[str] | None = None,
-        layout: int = 1,
     ) -> tuple[list[str], dict]:
-        """Write ``df`` as uniquely-named immutable files under
-        ``data/``, harvesting per-file footer stats for manifest-level
-        data skipping on the way through.
+        """Write ``df`` as uniquely-named immutable files under a fresh
+        commit-scoped directory ``data/c<uuid>/``, harvesting per-file
+        footer stats for manifest-level data skipping on the way
+        through. This is the table's one on-disk format
+        (``_TABLE_FORMAT``).
 
-        **Layout v2 (write-at-final-keys, the default for new
-        tables):** executor tasks write the data files DIRECTLY at
-        their final keys under a fresh commit-scoped directory
-        ``data/c<uuid>/`` — the bytes are written exactly once, on any
-        backend Spark can address (the Iceberg shape). Hive
-        partitioning uses SHADOW copies of the partition columns
+        Hive partitioning uses SHADOW copies of the partition columns
         (``__p_<col>=val/`` path segments) so the data pages KEEP the
-        real columns: reads never need ``basePath`` path
-        reconstruction (explicit multi-commit-dir file lists would
-        trip Spark's conflicting-directory check), schema order/types
-        survive exactly, and footer min/max now cover partition
-        columns too. The commit invariant is unchanged — names are
-        fresh and nothing references them until the manifest lands; a
-        crashed write's directory is vacuum's normal backlog.
+        real columns: reads are explicit file lists with no path
+        reconstruction, schema order/types survive exactly, and footer
+        min/max cover partition columns too. The commit invariant —
+        names are fresh and nothing references them until the manifest
+        lands; a crashed write's directory is vacuum's normal backlog.
 
-        **Layout v1 (legacy):** the Spark write lands in a local
-        staging dir with plain hive ``col=val/`` paths (pages do NOT
-        carry partition columns; readers reconstruct them via
-        ``basePath``), then each file is published at a final unique
-        key. Existing v1 tables stay v1 — mixing the two partition
-        encodings in one snapshot would break reads — until a full
-        ``replace``/``optimize`` rewrites them. A storage without
-        ``supports_direct_write`` changes TRANSPORT, not format: v2
-        commits there stage locally and publish the identical
-        v2-format files, so a table's encoding never depends on which
-        store wrote it.
-
-        Either way the footer-stat + bloom harvest (plus, for v1, the
-        upload) runs as ONE distributed job once the file count
-        reaches ``distributed_publish_min_files`` — no per-file work
-        serializes on the driver; small commits keep the cheaper
-        driver-side loop."""
+        ``supports_direct_write`` on the storage chooses the TRANSPORT,
+        not the format: a direct-write store has executor tasks write
+        the files at their final keys (bytes written exactly once, the
+        Iceberg shape); any other store stages the identical files
+        locally and publishes them at the same keys. Either way the
+        footer-stat + bloom harvest (plus, when staged, the upload)
+        runs as ONE distributed job once the file count reaches
+        ``distributed_publish_min_files`` — no per-file work serializes
+        on the driver; small commits keep the cheaper driver-side
+        loop."""
         # COLUMN MAPPING boundary (see _column_mapping): the frame
         # arrives with LOGICAL names; files always store PHYSICAL
         # names, so renamed columns translate here and the harvested
@@ -3193,32 +3047,22 @@ class TransactionalTable:
                 bloom_by = [__mapping.get(c, c) for c in bloom_by]
         tasks: list[tuple[str | None, str, dict]] = []
         staging = None
-        # layout v2 is a FILE FORMAT (pages keep partition columns;
-        # hive segments are shadow-named): a direct-write-capable
-        # store lands the files at their final keys; one that isn't
-        # still stages v2-FORMAT files locally and publishes them —
-        # transport differs, the committed bytes are identical, so a
-        # v2 table never mixes encodings whatever storage wrote it.
-        direct = layout >= 2 and getattr(
-            self.storage, "supports_direct_write", False
-        )
+        direct = getattr(self.storage, "supports_direct_write", False)
         if any(c.startswith(_SHADOW_PREFIX) for c in partition_by or []):
-            # the shadow namespace is the layout's own; a real column
+            # the shadow namespace is the format's own; a real column
             # named __p_* would decode to the wrong partition name
             raise ValueError(
                 f"partition_by columns may not start with "
-                f"{_SHADOW_PREFIX!r} (reserved for layout-v2 shadow "
+                f"{_SHADOW_PREFIX!r} (reserved for shadow partition "
                 f"path segments): {partition_by}"
             )
         out = df
-        if layout >= 2 and partition_by:
+        write_pb = [_SHADOW_PREFIX + c for c in partition_by or []]
+        if write_pb:
             from pyspark.sql import functions as F
 
             for c in partition_by:
                 out = out.withColumn(_SHADOW_PREFIX + c, F.col(c))
-            write_pb = [_SHADOW_PREFIX + c for c in partition_by]
-        else:
-            write_pb = list(partition_by or [])
 
         def _part_vals(segs: list[str]) -> dict:
             vals = {}
@@ -3233,7 +3077,7 @@ class TransactionalTable:
             return vals
 
         try:
-            cdir = f"{DATA_DIR}/c{uuid.uuid4().hex}"  # v2 commit dir
+            cdir = f"{DATA_DIR}/c{uuid.uuid4().hex}"  # commit dir
             stats: dict[str, dict] | None = None
             if direct and not write_pb:
                 # arrow-native staging (round 15): write-at-final-keys
@@ -3281,9 +3125,8 @@ class TransactionalTable:
                 else:
                     # enumerate staged files driver-side (a LISTING,
                     # not per-file content I/O) and assign their final
-                    # unique keys: under a fresh commit dir for v2
-                    # (same key shape as the direct write), flat hive
-                    # keys for v1
+                    # keys under the commit dir (same key shape as the
+                    # direct write)
                     for dirpath, dirnames, filenames in os.walk(staging):
                         dirnames[:] = [d for d in dirnames if "=" in d]
                         rel = os.path.relpath(dirpath, staging)
@@ -3296,13 +3139,7 @@ class TransactionalTable:
                             if not name.endswith(".parquet"):
                                 continue
                             local = os.path.join(dirpath, name)
-                            if layout >= 2:
-                                key = f"{cdir}/{sub}{name}"
-                            else:
-                                key = (
-                                    f"{DATA_DIR}/{sub}"
-                                    f"{uuid.uuid4().hex}-{name}"
-                                )
+                            key = f"{cdir}/{sub}{name}"
                             tasks.append((local, key, part_vals))
             if stats is None and len(tasks) >= self.distributed_publish_min_files:
                 try:
@@ -3395,7 +3232,6 @@ class TransactionalTable:
                     partition_by=None,
                     max_records_per_file=max_records_per_file,
                     bloom_by=bloom_by,
-                    layout=layout,
                 )
             return keys, stats
         finally:
@@ -3405,9 +3241,9 @@ class TransactionalTable:
     def _staged_rows(self, spark: SparkSession, keys: list[str], stats: dict) -> int:
         """Row count of the staged files WITHOUT re-evaluating the input
         frame (the stage write already computed it once): sum the footer
-        counts harvested into ``stats``; if any file lacks them (no
-        pyarrow), fall back to a parquet count over the staged files —
-        a metadata-only job, not a recompute of the plan."""
+        counts harvested into ``stats``; if any file lacks them (an
+        unreadable footer), fall back to a parquet count over the staged
+        files — a metadata-only job, not a recompute of the plan."""
         if not keys:
             return 0
         if all("rows" in stats.get(k, {}) for k in keys):
@@ -3464,13 +3300,20 @@ class TransactionalTable:
           erase, so a later ``optimize()`` knows how to re-cluster.
           Change it by committing with different clustering args."""
         new_v = base_v + 1
+        # every snapshot is stamped with the one table format; the
+        # read-side gate (_check_format) rejects anything else, so a
+        # caller asking for another format is an error, never ignored
         meta = dict(meta or {})
+        if meta.setdefault("layout", _TABLE_FORMAT) != _TABLE_FORMAT:
+            raise ValueError(
+                f"{self.root}: meta['layout']={meta['layout']!r} is not "
+                f"supported; every commit writes layout={_TABLE_FORMAT}"
+            )
         for sticky in (
             "replay",
             "app",
             "clustering",
             "bloom_index",
-            "layout",
             "properties",
             "widened",
             "constraints",
@@ -3497,11 +3340,6 @@ class TransactionalTable:
             }
             if partition_by:
                 record["partition_by"] = list(partition_by)
-            if any("partition" in s for s in stats.values()):
-                # stats record LOGICAL (hive-decoded) partition values;
-                # readers use this flag to upgrade legacy manifests
-                # exactly once (see _upgrade_partition_encoding)
-                record["partition_encoding"] = "decoded"
             if mixed_schemas:
                 record["mixed_schemas"] = True
         else:
@@ -3543,11 +3381,7 @@ class TransactionalTable:
         # via _full_manifest) plans the identical file list
         record_rt = json.loads(payload.decode())  # JSON-normalized types,
         # decoupled from caller-held dicts — identical to a fresh read
-        full = (
-            self._upgrade_partition_encoding(record_rt)
-            if prev is None
-            else _apply_delta(prev, record_rt)
-        )
+        full = record_rt if prev is None else _apply_delta(prev, record_rt)
         self._cache_put(new_v, full)
         if new_v > 0 and new_v % self.checkpoint_interval == 0:
             # derived + idempotent: a crash here only means the next
@@ -3610,10 +3444,10 @@ class TransactionalTable:
         writers overwriting the SAME partition serialize by version
         with last-writer-wins (pass ``expect_version`` to forbid).
 
-        ``partition_by`` stages the hive layout (see ``_stage``) so
-        partition columns come back from file paths at read time and
-        per-file partition values ride the manifest for exact partition
-        pruning (``read(partitions={...})``).
+        ``partition_by`` stages hive-partitioned files (see ``_stage``):
+        the pages keep the partition columns and per-file partition
+        values ride the manifest for exact partition pruning
+        (``read(partitions={...})``).
 
         ``cluster_by`` range-partitions + sorts the staged files on the
         given columns before writing (``num_files`` output files,
@@ -3716,29 +3550,11 @@ class TransactionalTable:
                 self.root,
                 mode,
             )
-        cur0 = self.manifest()
-        if mode == "replace" or cur0 is None:
-            # a full replace (or first commit) owns the whole file set,
-            # so it sets the physical layout — v2 by default (pages
-            # keep partition columns; direct-write transport when the
-            # storage supports it, staged publish of the identical
-            # format otherwise). This is also how a legacy table
-            # migrates: OPTIMIZE rewrites everything through here.
-            # meta={"layout": 1} is the explicit compat knob to keep
-            # writing the legacy path-partitioned format. Append-family
-            # commits MUST stage in the table's existing layout (mixed
-            # partition encodings in one snapshot are unreadable).
-            meta = dict(meta or {})
-            layout = int(meta.get("layout") or 2)
-            meta["layout"] = layout
-        else:
-            layout = self._layout_of(cur0)
         keys, staged_stats = self._stage(
             df,
             partition_by=partition_by,
             max_records_per_file=max_records_per_file,
             bloom_by=bloom_by,
-            layout=layout,
         )
         # Drop empty staged files in DEFER mode: the schema-anchor
         # decision needs the commit's FINAL file set (retained +
@@ -3801,22 +3617,6 @@ class TransactionalTable:
                     # schema — footer merging would fail int-vs-bigint
                     meta = dict(meta or {})
                     meta["widened"] = True
-            if (
-                mode in ("append", "replace_partitions")
-                and prev is not None
-                and partition_by
-                and self._layout_of(prev) != layout
-            ):
-                # a concurrent full replace changed the physical layout
-                # while we staged: partitioned files in the OLD encoding
-                # cannot join the new snapshot (v1 needs basePath path
-                # reconstruction, v2 forbids it) — the caller re-reads
-                # and re-commits; the staged strays are vacuum backlog.
-                raise CommitConflict(
-                    f"{self.root}: staged with layout v{layout} but the "
-                    f"table is now layout v{self._layout_of(prev)} "
-                    "(concurrent replace); retry the commit"
-                )
             if mode == "append" and prev is not None:
                 if (prev.get("partition_by") or None) != (
                     list(partition_by) if partition_by else None
@@ -4287,7 +4087,6 @@ class TransactionalTable:
                 bloom_by=(m.get("meta", {}).get("bloom_index") or {}).get(
                     "cols"
                 ),
-                layout=self._layout_of(m),
             )
             keys, staged_stats, _ = _drop_empty_staged(
                 keys, staged_stats, bool(retained)
@@ -4377,7 +4176,6 @@ class TransactionalTable:
                 bloom_by=(m.get("meta", {}).get("bloom_index") or {}).get(
                     "cols"
                 ),
-                layout=self._layout_of(m),
             )
             keys, staged_stats, _ = _drop_empty_staged(
                 keys, staged_stats, bool(retained)
@@ -4540,12 +4338,11 @@ class TransactionalTable:
         streaming sink's replay watermark must survive the rollback or
         a resumed stream would re-apply batches the (restored-over)
         history already consumed — data goes back in time, the
-        exactly-once bookkeeping does not. The ONE exception is the
-        physical ``layout`` flag, which travels with the FILES: a v2
-        head restored to a v1 target must read the v1 files with
-        basePath path-partition reconstruction (and vice versa), so
-        the restored manifest records the target's layout, not the
-        head's."""
+        exactly-once bookkeeping does not. The exception is column
+        identity (mapping, drop tombstones, generated columns), which
+        travels with the restored schema and files. Target and head
+        share the one on-disk format (``_TABLE_FORMAT``), so the
+        restored files read exactly as they did at the target."""
         target = self.manifest(version)
         if target is None:
             raise FileNotFoundError(
@@ -4560,13 +4357,9 @@ class TransactionalTable:
                     f"but table is at v{base_v}; re-read and retry"
                 )
             prev = self.manifest(base_v) if base_v >= 0 else None
-            meta = {
-                "op": "restore",
-                "restored_version": version,
-                "layout": self._layout_of(target),
-            }
+            meta = {"op": "restore", "restored_version": version}
             # column identity (mapping + drop tombstones) travels with
-            # the restored SCHEMA and FILES, like layout — carrying the
+            # the restored SCHEMA and FILES — carrying the
             # head's mapping over the target's schema would logicalize
             # scans to names the restored schema doesn't declare
             t_meta = target.get("meta", {})
@@ -4816,11 +4609,9 @@ class TransactionalTable:
         self-contained before vacuuming the source, and ``fsck`` on
         the clone detects the breakage loudly. The clone's own
         ``vacuum`` can never touch foreign files (absolute keys are
-        never listed under the clone's root). Layout v2 sources only
-        (v1 path-partitioned files need basePath reconstruction, which
-        cannot span two roots); cloning a clone is fine — already-
-        absolute keys pass through. Requires an EMPTY destination (a
-        clone is a table's first commit, not a merge).
+        never listed under the clone's root). Cloning a clone is fine —
+        already-absolute keys pass through. Requires an EMPTY
+        destination (a clone is a table's first commit, not a merge).
 
         ``deep=True`` — DEEP CLONE (Delta's ``CREATE TABLE ... DEEP
         CLONE``): every borrowed data file and bloom sidecar is COPIED
@@ -4842,13 +4633,6 @@ class TransactionalTable:
         if m is None:
             raise FileNotFoundError(
                 f"clone_from: {source.root} has no version {src_v}"
-            )
-        if source._layout_of(m) < 2 and m.get("partition_by"):
-            raise ValueError(
-                f"clone_from: {source.root} v{src_v} is legacy layout v1 "
-                "(partition values live in file paths; two roots cannot "
-                "share one basePath) — optimize() the source to layout "
-                "v2 first"
             )
 
         def _abs(key: str) -> str:
@@ -4944,11 +4728,10 @@ class TransactionalTable:
         # Carry every STICKY meta key EXCEPT "replay" (a streaming
         # sink's replay watermark is the SINK's identity — a clone
         # claiming it would make a resumed streaming job skip batches
-        # against the wrong table) and "layout" (set below: the clone's
-        # manifest is layout v2 by construction — absolute keys, no
-        # basePath). Dropping "widened" or "properties" here would make
-        # a clone of a type-widened source unreadable (explicit-schema
-        # reads route off the flag) / silently strip user properties.
+        # against the wrong table). Dropping "widened" or "properties"
+        # here would make a clone of a type-widened source unreadable
+        # (explicit-schema reads route off the flag) / silently strip
+        # user properties.
         meta = {
             k: v
             for k, v in (m.get("meta") or {}).items()
@@ -4971,7 +4754,6 @@ class TransactionalTable:
                 "clone_kind": "deep" if deep else "shallow",
                 "clone_source": source.root,
                 "clone_version": src_v,
-                "layout": 2,
             }
         )
         # pre-existing commits are checked ONCE, before the loop: inside
@@ -5020,16 +4802,13 @@ class TransactionalTable:
         PARTITION FIELD`` shape) as a METADATA-ONLY commit: the new
         scheme applies to FUTURE writes, every existing file stays
         byte-identical under its own recorded partition values, and no
-        Spark job runs. Sound because layout v2 keeps partition
-        columns in the data pages and reads plan from per-file
+        Spark job runs. Sound because the data pages keep the partition
+        columns and reads plan from per-file
         ``partition`` stats: metadata pruning skips a file only when
         it RECORDS a queried column with a non-matching value (a file
         from an older scheme falls through to the exact residual
         filter — never a silent wrong result; see :meth:`read`).
-        Legacy v1 path-partitioned tables must ``optimize()`` to
-        layout v2 first — their partition columns exist only in file
-        paths, and two path schemes cannot share one ``basePath``
-        reconstruction. Old-scheme files migrate incrementally: any
+        Old-scheme files migrate incrementally: any
         rewrite (OPTIMIZE, copy-on-write DELETE/UPDATE/MERGE) re-stages
         its rows under the current scheme. ``replace_partitions``
         only owns files that record the current scheme's values, so it
@@ -5049,20 +4828,6 @@ class TransactionalTable:
             cur = list(m.get("partition_by") or [])
             if nt == cur:
                 return base_v  # no-op
-            if self._layout_of(m) < 2:
-                # v1 keeps partition values ONLY in file paths and
-                # appends stage in the table's existing layout, so a
-                # scheme change (or introducing partitioning over flat
-                # v1 files) would mix path encodings under one basePath
-                # — unreadable. This holds even when currently
-                # unpartitioned: the first new-scheme append would
-                # stage v1 path-partitioned files next to flat ones.
-                raise ValueError(
-                    f"{self.root}: partition evolution needs layout v2 "
-                    "(partition columns in data pages); this snapshot is "
-                    "legacy layout v1 — run optimize() to migrate, then "
-                    "alter"
-                )
             schema = m.get("schema") or {}
             unknown = [c for c in nt if c not in schema]
             if unknown:
@@ -5866,7 +5631,6 @@ class TransactionalTable:
                 bloom_by=(m.get("meta", {}).get("bloom_index") or {}).get(
                     "cols"
                 ),
-                layout=self._layout_of(m),
             )
             keys, staged_stats, _ = _drop_empty_staged(
                 keys, staged_stats, bool(retained)
@@ -6070,17 +5834,14 @@ class TransactionalTable:
         keep_keys: bool = False,
     ):
         """Reader over a snapshot's file SUBSET with the snapshot's
-        layout semantics applied (basePath for v1 partitioned tables,
-        mergeSchema for evolved ones, manifest-schema reconciliation
+        read semantics applied (mergeSchema for evolved tables,
+        manifest-schema reconciliation
         for ALTERed columns no file carries yet, deletion vectors
         anti-joined out — a rewrite of a DV-carrying file must not
         resurrect its soft-deleted rows). ``keep_keys`` retains the
         ``__dv_file``/``__dv_pos`` scan-position columns on the result
         (merge's touched-file discovery joins on them)."""
-        reader = spark.read
-        if self._path_partitioned(m):
-            reader = reader.option("basePath", self.storage.url(DATA_DIR))
-        reader = self._schema_reader(reader, m)
+        reader = self._schema_reader(spark.read, m)
         with _no_listing_job(spark, len(files)):
             raw = reader.parquet(*[self.storage.url(f) for f in files])
         dv_map = self._dv_map(m, files)
@@ -6147,10 +5908,7 @@ class TransactionalTable:
         from pyspark.sql import functions as F
 
         stats = m.get("stats", {})
-        reader = spark.read
-        if self._path_partitioned(m):
-            reader = reader.option("basePath", self.storage.url(DATA_DIR))
-        reader = self._schema_reader(reader, m)
+        reader = self._schema_reader(spark.read, m)
         with _no_listing_job(spark, len(affected)):
             raw = reader.parquet(*[self.storage.url(f) for f in affected])
         keyed = self._with_generated(
@@ -6216,7 +5974,6 @@ class TransactionalTable:
                     bloom_by=(
                         m.get("meta", {}).get("bloom_index") or {}
                     ).get("cols"),
-                    layout=self._layout_of(m),
                 )
                 staged_keys, staged_stats, _ = _drop_empty_staged(
                     staged_keys, staged_stats, True  # DV retains files
@@ -6305,7 +6062,6 @@ class TransactionalTable:
                 bloom_by=(m.get("meta", {}).get("bloom_index") or {}).get(
                     "cols"
                 ),
-                layout=self._layout_of(m),
             )
         if self._put_manifest(
             base_v,
@@ -6463,7 +6219,6 @@ class TransactionalTable:
                     bloom_by=(
                         m.get("meta", {}).get("bloom_index") or {}
                     ).get("cols"),
-                    layout=self._layout_of(m),
                 )
             finally:
                 pairs.unpersist()
@@ -6478,7 +6233,6 @@ class TransactionalTable:
                 bloom_by=(m.get("meta", {}).get("bloom_index") or {}).get(
                     "cols"
                 ),
-                layout=self._layout_of(m),
             )
         staged_keys, staged_stats, _ = _drop_empty_staged(
             staged_keys, staged_stats, True  # DV route retains all files
@@ -6574,7 +6328,6 @@ class TransactionalTable:
             appends,
             partition_by=m.get("partition_by"),
             bloom_by=(m.get("meta", {}).get("bloom_index") or {}).get("cols"),
-            layout=self._layout_of(m),
         )
         staged_keys, staged_stats, _ = _drop_empty_staged(
             staged_keys, staged_stats, True  # DV route retains all files
@@ -6678,7 +6431,6 @@ class TransactionalTable:
                 bloom_by=(m.get("meta", {}).get("bloom_index") or {}).get(
                     "cols"
                 ),
-                layout=self._layout_of(m),
             )
             keys, staged_stats, _ = _drop_empty_staged(
                 keys, staged_stats, bool(retained)
@@ -6803,7 +6555,6 @@ class TransactionalTable:
                     bloom_by=(
                         m.get("meta", {}).get("bloom_index") or {}
                     ).get("cols"),
-                    layout=self._layout_of(m),
                 )
             staged_keys, staged_stats = self._stage(
                 new_rows_df,
@@ -6811,7 +6562,6 @@ class TransactionalTable:
                 bloom_by=(m.get("meta", {}).get("bloom_index") or {}).get(
                     "cols"
                 ),
-                layout=self._layout_of(m),
             )
             all_keys = survivors_keys + staged_keys
             all_stats = {**survivors_stats, **staged_stats}
@@ -6980,7 +6730,6 @@ class TransactionalTable:
                 bloom_by=(m.get("meta", {}).get("bloom_index") or {}).get(
                     "cols"
                 ),
-                layout=self._layout_of(m),
             )
             keys, staged_stats, _ = _drop_empty_staged(
                 keys, staged_stats, bool(retained)
@@ -7305,7 +7054,6 @@ class TransactionalTable:
                 bloom_by=(m.get("meta", {}).get("bloom_index") or {}).get(
                     "cols"
                 ),
-                layout=self._layout_of(m),
             )
             keys, staged_stats, _ = _drop_empty_staged(
                 keys, staged_stats, bool(retained)

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import threading
 
 import pytest
@@ -1231,8 +1232,7 @@ def test_persisted_ivf_probe_equals_in_memory_and_prunes(spark, sf_dir, tmp_path
     )
     # pruning contract: the probe's scan must touch ONLY probed cells'
     # files — every input file path carries one of <= 4 centroid dirs
-    # (layout v2 hive-partitions on the shadow segment
-    # __p_centroid_id=; v1 on centroid_id= — match either)
+    # (files hive-partition on the shadow segment __p_centroid_id=)
     probed_dirs = {
         f.split("centroid_id=")[1].split("/")[0]
         for f in got_df.inputFiles()
@@ -1389,8 +1389,10 @@ def test_bloom_build_vectorized_bit_identical(tmp_path):
     import pyarrow.parquet as pq
 
     from nyc_taxi_etl_pyspark_spark.sources.txtable import (
+        _BLOOM_FORMAT_V,
         _BLOOM_K,
         _bloom_positions,
+        bloom_might_contain,
         build_bloom_stats,
     )
 
@@ -1425,6 +1427,19 @@ def test_bloom_build_vectorized_bit_identical(tmp_path):
             for h in _bloom_positions(v, m, k):
                 ref[h >> 3] |= 1 << (h & 7)
         assert base64.b64decode(got[c]["b64"]) == bytes(ref), c
+    # one-sided contract across formats: a bloom whose "v" is not the
+    # current format gives no proof — it may cost a read, never drop a
+    # file — even for a value its bits would reject
+    b = got["i"]
+    absent = next(
+        x for x in range(10**6, 10**6 + 1000) if not bloom_might_contain(b, x)
+    )
+    for foreign in (
+        {**b, "v": _BLOOM_FORMAT_V - 1},
+        {**b, "v": _BLOOM_FORMAT_V + 1},
+        {key: x for key, x in b.items() if key != "v"},
+    ):
+        assert bloom_might_contain(foreign, absent), foreign["m"]
 
 
 def test_bloom_index_prunes_point_lookups(spark, tmp_path):
@@ -1632,20 +1647,26 @@ def test_partition_values_hive_decoded_in_manifest(spark, tmp_path):
     """Manifests record DECODED partition values: percent-escapes
     resolved and the hive NULL sentinel mapped to None, so manifest
     partition pruning compares what the batch reader reconstructs —
-    not the escaped path segment."""
+    not the escaped path segment. Decoding happens exactly once: a
+    value that literally contains ``%XX`` survives a fresh handle's
+    read unchanged."""
     df = spark.createDataFrame(
-        [(1, "a:b"), (2, "plain"), (3, None)], "id int, grp string"
+        [(1, "a:b"), (2, "plain"), (3, None), (4, "p%3Aq")],
+        "id int, grp string",
     )
     t = TransactionalTable(str(tmp_path / "t"))
     t.commit(df, partition_by=["grp"])
+    t = TransactionalTable(str(tmp_path / "t"))  # cold: from the log
     vals = {
         s["partition"]["grp"]
         for s in t.manifest()["stats"].values()
         if "partition" in s
     }
-    assert vals == {"a:b", "plain", None}
+    assert vals == {"a:b", "plain", None, "p%3Aq"}
     got = t.read(spark, partitions={"grp": ["a:b"]}).collect()
     assert [(r.id, r.grp) for r in got] == [(1, "a:b")]
+    got = t.read(spark, partitions={"grp": ["p%3Aq"]}).collect()
+    assert [(r.id, r.grp) for r in got] == [(4, "p%3Aq")]
 
 
 def test_txstream_date_partitions_and_escaped_values(spark, tmp_path):
@@ -1752,125 +1773,6 @@ def test_partition_query_none_and_boolean_values(spark, tmp_path):
     got = tb.read(spark, partitions={"flag": [True]}).collect()
     assert sorted(r.id for r in got) == [1, 3]
     assert [r.id for r in tb.read(spark, partitions={"flag": [False]}).collect()] == [2]
-
-
-def test_legacy_encoded_manifest_upgrades_on_read(spark, tmp_path):
-    """A manifest written before partition-value decoding (raw path
-    segments: percent-escapes, hive NULL sentinel, no
-    partition_encoding flag) is upgraded in memory exactly once —
-    partition pruning and replace_partitions compare logical values,
-    and a modern flagged manifest passes through untouched (decode is
-    not idempotent for values containing %XX)."""
-    df = spark.createDataFrame(
-        [(1, "a:b"), (2, None)], "id int, grp string"
-    )
-    t = TransactionalTable(str(tmp_path / "t"))
-    t.commit(df, partition_by=["grp"])
-
-    # forge a LEGACY manifest: strip the flag, re-encode the values
-    key = f"_commits/v{t.latest_version():020d}.json"
-    raw = json.loads(t.storage.read(key))
-    assert raw["partition_encoding"] == "decoded"
-    del raw["partition_encoding"]
-    for s in raw["stats"].values():
-        if "partition" in s:
-            v = s["partition"]["grp"]
-            s["partition"]["grp"] = (
-                "__HIVE_DEFAULT_PARTITION__" if v is None
-                else v.replace("%", "%25").replace(":", "%3A")
-            )
-    path = os.path.join(str(tmp_path / "t"), key)
-    with open(path, "w") as f:
-        json.dump(raw, f)
-
-    # a FRESH handle, as when a legacy table predates this process —
-    # the original handle legitimately serves its immutable-version
-    # cache (committed manifests never change under the protocol; the
-    # forge above simulates a pre-upgrade writer, not a mutation)
-    t = TransactionalTable(str(tmp_path / "t"))
-    m = t.manifest()
-    vals = {
-        s["partition"]["grp"]
-        for s in m["stats"].values()
-        if "partition" in s
-    }
-    assert vals == {"a:b", None}  # decoded on read
-    got = t.read(spark, partitions={"grp": ["a:b"]}).collect()
-    assert [(r.id, r.grp) for r in got] == [(1, "a:b")]
-
-    # a modern manifest with a literal %XX in the VALUE survives
-    # untouched (the flag prevents double-decoding)
-    df2 = spark.createDataFrame([(9, "p%3Aq")], "id int, grp string")
-    t2 = TransactionalTable(str(tmp_path / "t2"))
-    t2.commit(df2, partition_by=["grp"])
-    m2 = t2.manifest()
-    vals2 = {
-        s["partition"]["grp"]
-        for s in m2["stats"].values()
-        if "partition" in s
-    }
-    assert vals2 == {"p%3Aq"}
-    assert [r.id for r in t2.read(spark, partitions={"grp": ["p%3Aq"]}).collect()] == [9]
-
-
-def test_vacuum_checkpoint_of_legacy_manifest_not_double_decoded(spark, tmp_path):
-    """A vacuum whose oldest retained version is a LEGACY full-format
-    manifest serializes the in-memory-upgraded dict as the base-keep
-    checkpoint. The upgrade must stamp partition_encoding='decoded' on
-    that dict, or a FRESH handle reading the checkpoint decodes AGAIN —
-    decode is not idempotent, so a value containing a literal %XX
-    escape would be silently corrupted, breaking partition pruning."""
-    # 'a%3Ab' decodes to 'a:b' — a second decode of an already-decoded
-    # 'a%3Ab' literal would also yield 'a:b', conflating two distinct
-    # partitions; use a value whose single-decode form still contains %
-    df = spark.createDataFrame(
-        [(1, "x%253Ay"), (2, "plain")], "id int, grp string"
-    )
-    t = TransactionalTable(str(tmp_path / "t"))
-    t.commit(df, partition_by=["grp"])  # v0
-
-    # forge v0 into a LEGACY manifest: strip the flag, re-encode values
-    key = f"_commits/v{0:020d}.json"
-    raw = json.loads(t.storage.read(key))
-    del raw["partition_encoding"]
-    for s in raw["stats"].values():
-        if "partition" in s:
-            v = s["partition"]["grp"]
-            s["partition"]["grp"] = v.replace("%", "%25")
-    with open(os.path.join(str(tmp_path / "t"), key), "w") as f:
-        json.dump(raw, f)
-
-    # fresh handle (legacy table predating this process): append so the
-    # keep-set spans v0..v1, then vacuum — base-keep checkpoint of v0
-    # serializes the upgraded dict
-    t1 = TransactionalTable(str(tmp_path / "t"))
-    t1.commit(
-        spark.createDataFrame([(3, "later")], "id int, grp string"),
-        mode="append",
-        partition_by=["grp"],
-    )
-    t1.vacuum(retain_versions=2, unreferenced_grace_s=0)
-    from nyc_taxi_etl_pyspark_spark.sources.txtable import (
-        _decode_checkpoint_parquet,
-    )
-
-    ck = _decode_checkpoint_parquet(
-        t1.storage.read(f"_checkpoints/v{0:020d}.parquet")
-    )
-    assert ck.get("partition_encoding") == "decoded"
-
-    # a THIRD fresh handle resolves v0 from the checkpoint: the logical
-    # value must be the single-decode form, not a double-decode
-    t2 = TransactionalTable(str(tmp_path / "t"))
-    m0 = t2.manifest(0)
-    vals = {
-        s["partition"]["grp"]
-        for s in m0["stats"].values()
-        if "partition" in s
-    }
-    assert vals == {"x%253Ay", "plain"}  # double decode would give x%3Ay
-    got = t2.read(spark, version=0, partitions={"grp": ["x%253Ay"]}).collect()
-    assert [(r.id, r.grp) for r in got] == [(1, "x%253Ay")]
 
 
 def test_checkpoint_interval_validated_before_any_commit(tmp_path):
@@ -2177,7 +2079,7 @@ def test_metadata_count_and_timestamp_as_of(spark, tmp_path):
 
 def test_read_appended_partitioned_layout_rebuilds_partition_columns(spark, tmp_path):
     """read_appended on a hive-partitioned table must surface the
-    partition columns (basePath read) and return only the appended
+    partition columns (kept in the data pages) and return only the appended
     rows across partitions."""
     t = TransactionalTable(str(tmp_path / "t"))
     df1 = spark.createDataFrame(
@@ -2605,32 +2507,6 @@ def test_sql_delete_temporal_literal_hits_bloomed_files(spark, tmp_path):
     ), "rows survived the DELETE (bloom false negative)"
 
 
-def test_bloom_legacy_v1_blooms_probe_with_v1_canon(spark, tmp_path):
-    """Persisted pre-v2 blooms (no "v" key) keep probing with the
-    legacy canonical form — the dispatch prevents a v2 probe form from
-    turning an OLD fixture table's bloom into a false negative."""
-    from nyc_taxi_etl_pyspark_spark.sources.txtable import (
-        _BLOOM_K,
-        _bloom_positions,
-        _canon_bloom_value_v1,
-        bloom_might_contain,
-    )
-    import base64
-
-    m = 1024
-    bits = bytearray(m // 8)
-    for v in (7, "x"):
-        for h in _bloom_positions(v, m, _BLOOM_K, _canon_bloom_value_v1):
-            bits[h >> 3] |= 1 << (h & 7)
-    legacy = {"m": m, "k": _BLOOM_K, "b64": base64.b64encode(bytes(bits)).decode()}
-    # numeric collapse existed in v1: int and float probes both match
-    assert bloom_might_contain(legacy, 7)
-    assert bloom_might_contain(legacy, 7.0)
-    # v1 strings were repr()-quoted; the dispatch must keep that form
-    assert bloom_might_contain(legacy, "x")
-    assert not bloom_might_contain(legacy, "y")
-
-
 def test_prune_files_in_list_none_and_mixed_types(spark, tmp_path):
     """An IN-list containing None (asking for NULLs) or mixed types
     must degrade to a conservative keep — never crash the read, never
@@ -2838,8 +2714,7 @@ def test_layout_v2_writes_data_bytes_once_at_final_keys(
     )
     assert all(key_re.match(f) for f in m["files"]), m["files"]
     got = t.read(spark)
-    # exact schema: original column ORDER and TYPES (v1's basePath
-    # reconstruction appended inferred partition cols at the end)
+    # exact schema: original column ORDER and TYPES
     assert got.schema == df.schema
     assert sorted(got.collect(), key=lambda r: r.id) == sorted(
         df.collect(), key=lambda r: r.id
@@ -2883,64 +2758,13 @@ def test_layout_v2_maintenance_stays_v2_and_reads_pin(spark, tmp_path):
     assert t.read(spark, partitions={"grp": ["c"]}).count() == 1
     t.delete(spark, [("id", 4, 4)])
     assert t.read(spark).count() == 4
-    assert t._layout_of(t.manifest()) == 2
+    assert t.manifest()["meta"]["layout"] == 2
     res = t.optimize_incremental(spark, target_rows_per_file=1000)
-    assert t._layout_of(t.manifest()) == 2
+    assert t.manifest()["meta"]["layout"] == 2
     t.optimize(spark)
-    assert t._layout_of(t.manifest()) == 2
+    assert t.manifest()["meta"]["layout"] == 2
     assert t.read(spark).count() == 4
     assert t.read(spark, version=1).count() == 5  # pre-delete snapshot
-
-
-def test_layout_v1_appends_stay_v1_and_optimize_migrates(spark, tmp_path):
-    """A legacy (v1) table keeps staging appends in v1 — mixing the
-    two partition encodings in one snapshot would be unreadable — and
-    a FULL rewrite (optimize → replace commit) migrates it to v2.
-    Old v1 versions stay readable via their own manifests' layout."""
-    import re
-
-    df = _v2_df(spark)
-    root = str(tmp_path / "t")
-    t1 = TransactionalTable(root)
-    # the explicit compat knob writes the legacy format
-    t1.commit(df, partition_by=["grp"], meta={"layout": 1})
-    assert t1._layout_of(t1.manifest()) == 1
-    v1_re = re.compile(r"^data/grp=[^/]+/[0-9a-f]{32}-.+\.parquet$")
-    assert all(v1_re.match(f) for f in t1.manifest()["files"])
-
-    t2 = TransactionalTable(root)  # direct-capable handle
-    t2.commit(
-        spark.createDataFrame([(9, "c", 9.5)], "id int, grp string, v double"),
-        mode="append",
-        partition_by=["grp"],
-    )
-    m = t2.manifest()
-    assert t2._layout_of(m) == 1  # append inherited the table layout
-    assert all(v1_re.match(f) for f in m["files"])
-    got = t2.read(spark)
-    assert got.count() == 5
-    assert {r.grp for r in got.select("grp").distinct().collect()} == {
-        "a",
-        "b",
-        "c",
-        None,
-    }
-    # full optimize rewrites every file → migrates the table to v2
-    t2.optimize(spark)
-    m2 = t2.manifest()
-    assert t2._layout_of(m2) == 2
-    assert all(f.startswith("data/c") for f in m2["files"])
-    assert t2.read(spark).count() == 5
-    assert t2.read(spark, partitions={"grp": ["a"]}).count() == 2
-    # time travel to the v1 snapshot still reconstructs via basePath
-    old = t2.read(spark, version=1)
-    assert old.count() == 5
-    assert {r.grp for r in old.select("grp").distinct().collect()} == {
-        "a",
-        "b",
-        "c",
-        None,
-    }
 
 
 def test_layout_v2_format_survives_non_direct_storage(spark, tmp_path):
@@ -2957,7 +2781,7 @@ def test_layout_v2_format_survives_non_direct_storage(spark, tmp_path):
     t.storage.supports_direct_write = False  # e.g. an encrypting wrapper
     t.commit(df, partition_by=["grp"])
     m = t.manifest()
-    assert t._layout_of(m) == 2
+    assert m["meta"]["layout"] == 2
     key_re = re.compile(r"^data/c[0-9a-f]{32}/__p_grp=[^/]+/.+\.parquet$")
     assert all(key_re.match(f) for f in m["files"]), m["files"]
     got = t.read(spark)
@@ -2973,80 +2797,53 @@ def test_layout_v2_format_survives_non_direct_storage(spark, tmp_path):
     assert t2.read(spark, partitions={"grp": ["c"]}).count() == 1
 
 
-def test_restore_across_layout_migration_carries_target_layout(
-    spark, tmp_path
-):
-    """RESTORE to a v1 snapshot from a v2 head must stamp the TARGET's
-    layout on the restored manifest — the flag travels with the files
-    (v1 files need basePath partition reconstruction; the head's v2
-    flag would silently null the partition columns)."""
-    df = _v2_df(spark)
+@pytest.mark.parametrize("found", [1, None], ids=["layout_1", "layout_missing"])
+def test_superseded_table_format_rejected(spark, tmp_path, found):
+    """Every superseded on-disk format meets one clear ValueError from
+    the single format gate. The old formats are fabricated by editing
+    the raw ``_commits/`` records of a fresh table: ``meta.layout`` set
+    to 1 (the path-partitioned format) or deleted (tables older than
+    the flag). ``manifest``, ``read`` and predicated planning over a
+    sharded checkpoint all refuse the snapshot instead of reading it
+    under the current format's rules, and a commit asking for another
+    format raises rather than being ignored."""
     root = str(tmp_path / "t")
-    t = TransactionalTable(root)
-    t.commit(df, partition_by=["grp"], meta={"layout": 1})  # v0: layout v1
-    t.commit(
-        spark.createDataFrame([(9, "c", 9.5)], "id int, grp string, v double"),
-        mode="replace",
-        partition_by=["grp"],
-    )  # v1: layout v2 (migrating replace)
-    assert t._layout_of(t.manifest()) == 2
-    t.restore(0)
-    m = t.manifest()
-    assert t._layout_of(m) == 1  # the restored files are v1-encoded
-    got = t.read(spark)
-    assert got.count() == 4
-    assert {r.grp for r in got.select("grp").distinct().collect()} == {
-        "a",
-        "b",
-        None,
-    }
-    # and restoring forward to the v2 snapshot flips the flag back
-    t.restore(1)
-    assert t._layout_of(t.manifest()) == 2
-    assert t.read(spark).count() == 1
-    # appends after the rollback keep staging in the restored layout
-    t.restore(0)
-    t.commit(
-        spark.createDataFrame([(7, "d", 7.5)], "id int, grp string, v double"),
-        mode="append",
-        partition_by=["grp"],
+    t = TransactionalTable(root, checkpoint_interval=1, checkpoint_shard_files=8)
+    ids = lambda lo, hi: spark.range(lo, hi).select(  # noqa: E731
+        F.col("id"), (F.col("id") % 7).alias("k")
     )
-    assert t._layout_of(t.manifest()) == 1
-    assert t.read(spark, partitions={"grp": ["d"]}).count() == 1
+    t.commit(ids(0, 200), cluster_by=["id"], num_files=16)
+    t.commit(ids(200, 400), mode="append", cluster_by=["id"], num_files=16)
+    t.checkpoint_interval = 10**9  # version 2: a delta past v1's sharded checkpoint
+    t.commit(ids(400, 420), mode="append", num_files=2)
+    band = [("id", 5, 9)]
+    sharded = TransactionalTable(root, checkpoint_shard_files=8)
+    assert sharded._planning_manifest(None, band, None, None)["pruned_view"]
 
+    for key in t.storage.list("_commits"):
+        raw = json.loads(t.storage.read(key))
+        if found is None:
+            raw["meta"].pop("layout")
+        else:
+            raw["meta"]["layout"] = found
+        with open(t.storage.url(key), "w") as f:
+            json.dump(raw, f)
 
-def test_layout_race_append_vs_migrating_replace_conflicts(
-    spark, tmp_path, monkeypatch
-):
-    """An append staged in v1 that loses the race to a layout-migrating
-    replace must CONFLICT loudly, never splice v1-encoded partitioned
-    files into a v2 snapshot."""
-    df = _v2_df(spark)
-    root = str(tmp_path / "t")
-    t = TransactionalTable(root)
-    t.commit(df, partition_by=["grp"], meta={"layout": 1})
+    msg = rf"{re.escape(root)}: snapshot v2 has table format layout={found}"
+    with pytest.raises(ValueError, match=msg):
+        TransactionalTable(root).manifest()
+    with pytest.raises(ValueError, match=msg):
+        TransactionalTable(root).read(spark)
+    cold = TransactionalTable(root, checkpoint_shard_files=8)
+    with pytest.raises(ValueError, match=msg):
+        cold._planning_manifest(None, band, None, None)
+    with pytest.raises(ValueError, match=msg):
+        cold.read(spark, where=band)
 
-    appender = TransactionalTable(root)
-    orig = appender._staged_rows
-
-    def _race(spark_, keys, stats):
-        # between stage and manifest-put: a v2-capable writer replaces
-        winner = TransactionalTable(root)
-        winner.commit(df, mode="replace", partition_by=["grp"])
-        assert winner._layout_of(winner.manifest()) == 2
-        return orig(spark_, keys, stats)
-
-    monkeypatch.setattr(appender, "_staged_rows", _race)
-    with pytest.raises(CommitConflict, match="layout"):
-        appender.commit(
-            spark.createDataFrame(
-                [(9, "c", 9.5)], "id int, grp string, v double"
-            ),
-            mode="append",
-            partition_by=["grp"],
-        )
-    # table is intact at the winner's snapshot
-    assert TransactionalTable(root).read(spark).count() == 4
+    fresh = TransactionalTable(str(tmp_path / "fresh"))
+    with pytest.raises(ValueError, match=r"meta\['layout'\]=1"):
+        fresh.commit(ids(0, 10), meta={"layout": 1})
+    assert fresh.latest_version() == -1
 
 
 def _dml_table(spark, tmp_path, name):
@@ -3316,7 +3113,6 @@ def test_crashed_direct_write_is_invisible_and_vacuumed(spark, tmp_path):
             [(7, "z", 7.5)], "id int, grp string, v double"
         ),
         partition_by=["grp"],
-        layout=2,
     )
     assert stray_keys and all(k.startswith("data/c") for k in stray_keys)
     # invisible to every read form
@@ -3499,7 +3295,7 @@ def test_sql_create_table_as_select_full_lifecycle(spark, tmp_path):
     assert spark.sql("SELECT count(*) AS n FROM ctas_t").first().n == 20
     t = TransactionalTable(path)
     assert t.manifest()["partition_by"] == ["grp"]
-    assert t._layout_of(t.manifest()) == 2
+    assert t.manifest()["meta"]["layout"] == 2
     execute_dml(spark, "INSERT INTO ctas_t SELECT 99, 'g9', 9.5")
     execute_dml(spark, "UPDATE ctas_t SET v = v * 2 WHERE id = 99")
     assert t.read(spark, equals={"id": 99}).first().v == 19.0
@@ -3678,25 +3474,6 @@ def test_checkpoint_parquet_roundtrip_and_projection(spark, tmp_path):
     assert f"_checkpoints/v{2:020d}.parquet" in t.storage.list("_checkpoints")
     fresh = TransactionalTable(str(tmp_path / "t"))
     assert fresh.manifest(2) == full
-
-
-def test_checkpoint_legacy_json_still_readable(spark, tmp_path):
-    """A pre-columnar JSON checkpoint (legacy writers) keeps resolving:
-    the reader prefers parquet but falls back to the JSON object when
-    that's what's on disk."""
-    t = TransactionalTable(str(tmp_path / "t"), checkpoint_interval=3)
-    t.commit(spark.range(10).select("id"))
-    for i in range(3):
-        t.commit(spark.range(10 + i, 20 + i).select("id"), mode="append")
-    # forge: replace the parquet checkpoint at v3 with the JSON form
-    pk = f"_checkpoints/v{3:020d}.parquet"
-    jk = f"_checkpoints/v{3:020d}.json"
-    full = t.manifest(3)
-    t.storage.delete(pk)
-    t.storage.put_if_absent(jk, json.dumps(full, sort_keys=True).encode())
-    fresh = TransactionalTable(str(tmp_path / "t"))
-    assert fresh.manifest(3) == full
-    assert fresh.read(spark, version=3).count() == 40
 
 
 def test_vacuum_checkpoints_oldest_retained_before_dropping_deltas(
@@ -4924,26 +4701,9 @@ def test_alter_partitioning_evolution_metadata_only(spark, tmp_path):
     assert parts == {("q",)}
     assert t.read(spark).count() == 160
 
-    # unknown column and legacy v1 layouts reject loudly
+    # an unknown column rejects loudly
     with pytest.raises(ValueError, match="unknown columns"):
         t.alter_partitioning(spark, ["nope"])
-    t2 = TransactionalTable(str(tmp_path / "t2"))
-    t2.commit(
-        spark.range(40).select(F.col("id"), (F.col("id") % 2).alias("p")),
-        partition_by=["p"],
-        meta={"layout": 1},
-    )
-    with pytest.raises(ValueError, match="layout v2"):
-        t2.alter_partitioning(spark, ["id"])
-    # introducing partitioning over FLAT v1 files is just as unreadable
-    # (appends stage in the table's layout -> mixed path encodings)
-    t3 = TransactionalTable(str(tmp_path / "t3"))
-    t3.commit(
-        spark.range(10).select(F.col("id"), (F.col("id") % 2).alias("p")),
-        meta={"layout": 1},
-    )
-    with pytest.raises(ValueError, match="layout v2"):
-        t3.alter_partitioning(spark, ["p"])
 
 
 def test_alter_partitioning_sql_and_drop(spark, tmp_path):
@@ -5611,7 +5371,7 @@ def test_vacuum_reclaims_orphan_checkpoint_shards(spark, tmp_path):
         num_files=20,
     )
     # fabricate a crashed writer: shards for a version with NO root
-    orphan = _checkpoint_shard_key(t.latest_version() + 50, 0)
+    orphan = _checkpoint_shard_key(t.latest_version() + 50, 0, 8)
     t.storage.put_if_absent(orphan, b"partial")
     _time.sleep(0.01)
     t.vacuum(retain_versions=10, unreferenced_grace_s=0.0)
@@ -5967,48 +5727,6 @@ def test_empty_prune_read_survives_vacuumed_anchor(spark, tmp_path):
     df = cold.read(spark, where=[("id", 50000, 60000)])
     assert df.count() == 0
     assert set(df.columns) == {"id", "v", "x"}
-
-
-def test_sharded_checkpoint_legacy_layout_still_reads(spark, tmp_path):
-    """Upgrade path for the round-12 layout-identity change: a sharded
-    checkpoint written BEFORE shard keys carried the size namespace
-    (legacy ``.shard-NNNNN`` keys, root without ``shard_size``) must
-    still materialize and prune on a current reader."""
-    import os as _os
-
-    t = TransactionalTable(
-        str(tmp_path / "t"), checkpoint_interval=1, checkpoint_shard_files=8
-    )
-    t.commit(_snapshot_df(spark, 0, rows=200), cluster_by=["id"], num_files=16)
-    t.commit(
-        _snapshot_df(spark, 1, rows=200).withColumn("id", F.col("id") + 200),
-        mode="append",
-        cluster_by=["id"],
-        num_files=16,
-    )
-    ckdir = tmp_path / "t" / "_checkpoints"
-    # rewrite the modern layout into the legacy one
-    for n in sorted(_os.listdir(ckdir)):
-        if ".s8.shard-" in n:
-            _os.rename(ckdir / n, ckdir / n.replace(".s8.shard-", ".shard-"))
-    root_name = next(
-        n for n in _os.listdir(ckdir) if n.endswith(".root.json")
-    )
-    root = json.loads((ckdir / root_name).read_text())
-    root.pop("shard_size", None)
-    (ckdir / root_name).write_text(json.dumps(root, sort_keys=True))
-
-    cold = TransactionalTable(str(tmp_path / "t"), checkpoint_shard_files=8)
-    m = cold.manifest()
-    assert m["files"] == t.manifest()["files"]
-    got = sorted(
-        r["id"] for r in cold.read(spark, where=[("id", 5, 9)]).collect()
-    )
-    assert got == [5, 6, 7, 8, 9]
-    # pruned planning still walks the legacy shards
-    cold2 = TransactionalTable(str(tmp_path / "t"), checkpoint_shard_files=8)
-    pm = cold2._planning_manifest(None, [("id", 5, 9)], None, None)
-    assert pm is not None and pm["files"]
 
 
 def test_arrow_stage_takes_non_nullable_schema(spark, tmp_path):

@@ -14,6 +14,7 @@ caveat surfaced by fsck."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -127,16 +128,19 @@ def test_clone_time_travel_and_clone_of_clone(spark, tmp_path):
 
 
 def test_clone_rejects_v1_and_nonempty_dest(spark, tmp_path):
-    legacy = TransactionalTable(str(tmp_path / "legacy"))
-    legacy.commit(
-        spark.range(40).select(F.col("id"), (F.col("id") % 2).alias("p")),
-        partition_by=["p"],
-        meta={"layout": 1},
-    )
+    # a superseded-format source (meta.layout 1) meets the format gate
+    # when the clone resolves its snapshot
+    legacy = _src(spark, tmp_path, n=40)
+    key = legacy.storage.list("_commits")[-1]
+    raw = json.loads(legacy.storage.read(key))
+    raw["meta"]["layout"] = 1
+    with open(legacy.storage.url(key), "w") as f:
+        json.dump(raw, f)
     dst = TransactionalTable(str(tmp_path / "dst"))
-    with pytest.raises(ValueError, match="layout v1"):
-        dst.clone_from(legacy)
-    src = _src(spark, tmp_path, n=50)
+    with pytest.raises(ValueError, match="layout=1"):
+        dst.clone_from(TransactionalTable(legacy.root))
+    assert dst.latest_version() == -1
+    src = _src(spark, tmp_path / "fresh", n=50)
     dst.commit(spark.range(3).select(F.col("id")))
     with pytest.raises(ValueError, match="FIRST commit"):
         dst.clone_from(src)

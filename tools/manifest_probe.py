@@ -43,6 +43,7 @@ def main() -> int:
     args = ap.parse_args()
 
     from nyc_taxi_etl_pyspark_spark.sources.txtable import (
+        _TABLE_FORMAT,
         TransactionalTable,
         _manifest_key,
     )
@@ -73,8 +74,7 @@ def main() -> int:
                     "rows": rpf,
                     "schema": schema,
                     "stats": {files[0]: stats[files[0]]},
-                    "meta": {},
-                    "partition_encoding": "decoded",
+                    "meta": {"layout": _TABLE_FORMAT},
                 }
             ).encode(),
         )
@@ -88,7 +88,7 @@ def main() -> int:
                     "stats": {},
                     "rows": n * rpf,
                     "schema": schema,
-                    "meta": {},
+                    "meta": {"layout": _TABLE_FORMAT},
                 }
             ).encode(),
         )
@@ -99,8 +99,7 @@ def main() -> int:
             "rows": n * rpf,
             "schema": schema,
             "stats": stats,
-            "meta": {},
-            "partition_encoding": "decoded",
+            "meta": {"layout": _TABLE_FORMAT},
         }
         t0 = time.time()
         t._write_checkpoint(full)

@@ -18,9 +18,9 @@ clause form (conditional DELETE/UPDATE, guarded INSERT, NOT MATCHED
 BY SOURCE) — plus merge-on-read deletion-vector DELETE/UPDATE
 (crossing DVs with optimize, restore, vacuum, and checkpoint
 reconstruction), and randomly flips the storage's
-``supports_direct_write`` capability, so version histories MIX layout
-v1 and v2 snapshots — restore/time-travel/vacuum must then resolve
-each version under its own manifest's layout flag.
+``supports_direct_write`` capability, so version histories mix
+directly-written and staged-then-published commits of the one table
+format — restore/time-travel/vacuum must read them all alike.
 
 Usage: python tools/soak_txtable.py [n_seeds] [n_ops]
 Exits non-zero on the first divergence.
@@ -96,10 +96,6 @@ def soak(spark, seed: int, n_ops: int) -> int:
             num_files=rng.randint(1, 4),
             bloom_by=["k"] if rng.random() < 0.5 else None,
             cluster_by=[vname[0]] if rng.random() < 0.3 else None,
-            # ~1/4 of replaces write the LEGACY layout, so version
-            # histories mix v1 and v2 snapshots and restore/appends
-            # must follow each manifest's own flag
-            meta={"layout": 1} if rng.random() < 0.25 else None,
         )
         model.clear()
         model.update(d)
@@ -332,9 +328,6 @@ def soak(spark, seed: int, n_ops: int) -> int:
         # vacuum must never touch the source's files.
         if not t.exists():
             return
-        mf = t.manifest()
-        if t._layout_of(mf) < 2 and mf.get("partition_by"):
-            return  # v1 path-partitioned sources reject by contract
         d = tempfile.mkdtemp(prefix="soakclone-")
         try:
             c = TransactionalTable(os.path.join(d, "c"))
@@ -375,15 +368,10 @@ def soak(spark, seed: int, n_ops: int) -> int:
     def do_alter_partitioning():
         # partition evolution: flip future-write partitioning between
         # none and by-k; old files keep their recorded scheme, model
-        # unchanged (content identical). Legacy v1-layout snapshots
-        # (do_replace's ~1/4 meta={"layout": 1}) reject loudly — that
-        # reject IS the contract, so just skip them here.
+        # unchanged (content identical)
         if not t.exists():
             return
-        m = t.manifest()
-        if (m.get("meta", {}).get("layout") or 2) < 2:
-            return
-        cur = m.get("partition_by")
+        cur = t.manifest().get("partition_by")
         t.alter_partitioning(spark, None if cur else ["k"])
 
     def do_dv_compact():
@@ -393,8 +381,8 @@ def soak(spark, seed: int, n_ops: int) -> int:
             t.compact_deletion_vectors(spark)
 
     def do_flip_layout_capability():
-        # a later replace/optimize then migrates the layout; appends
-        # keep the table's current layout regardless of the flag
+        # flips the TRANSPORT only (direct write vs staged publish);
+        # every commit writes the same table format either way
         t.storage.supports_direct_write = (
             not t.storage.supports_direct_write
         )
